@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 /** Program 2 equivalent (SURVEY.md §3.2): Markdown dir → LLM → cleaned
   * Markdown + raw/FAILED JSON, with idempotent incremental skip.
   *
-  * Spark plan: `wholetext scan → LEFT ANTI join(existing outputs) → limit →
+  * Spark plan: `document-dir scan → LEFT ANTI join(existing outputs) → limit →
   * mapPartitions(enrich) → split ok/fail → keyed-file sinks`. The anti-join
   * is the distributed form of the reference's skip-if-exists check
   * (`_filter_already_processed_files`, `src/program2_ai_processor.py:692-724`).

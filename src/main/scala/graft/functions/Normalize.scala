@@ -3,10 +3,10 @@ package graft.functions
 import graft.core.RefConfig
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Null/missing normalization and numeric formatting (SURVEY.md §2.2 P1/P4/P5,
-  * §2.6 F2) as pure `Column` expressions — fully codegen'd, no UDFs.
+  * §2.6 F2): pure `Column` expressions (codegen'd, no UDFs) for the registry
+  * queries, and the plain-Scala twins the markdown render pass runs.
   *
   * Reference semantics: `get_value_from_row`
   * (`src/program1_generate_markdowns.py:92-123`), `format_number_string`
@@ -22,11 +22,6 @@ object Normalize {
     when(c.isNull || t === "" || upper(t) === "N/A", lit(Missing)).otherwise(t)
   }
 
-  /** P1 on a column that may not exist in the schema (unknown → sentinel). */
-  def normalizeMissing(schema: StructType, name: String): Column =
-    if (schema.fieldNames.contains(name)) normalizeMissing(col(s"`$name`"))
-    else lit(Missing)
-
   /** F2: a full-match `-?\d+\.0` string renders as its integer part.
     * `int(float(v))` ≡ cast double→long (handles "-0.0" → "0").
     */
@@ -40,53 +35,31 @@ object Normalize {
     when(n === Missing, lit(null)).otherwise(n)
   }
 
-  /** P4: first non-missing value across year-suffixed columns, in preference
-    * order; all missing → sentinel.
-    */
-  def yearCoalesce(schema: StructType, base: String,
-      suffixes: Seq[String] = RefConfig.SurveyYearSuffixes): Column = {
-    val candidates = suffixes.map { suf =>
-      val name = base + suf
-      if (schema.fieldNames.contains(name)) nullIfMissing(col(s"`$name`"))
-      else lit(null).cast("string")
-    }
-    coalesce(candidates :+ lit(Missing): _*)
-  }
-
   /** Generic P4 over already-derived columns (used by the oracle query). */
   def yearCoalesce(candidates: Seq[Column]): Column =
     coalesce(candidates.map(nullIfMissing) :+ lit(Missing): _*)
 
-  /** P5: newest suffix for which ANY SurveyAnswerCategory* placeholder has
-    * data — note an individual P4 value may still fall back to the older year
-    * (reference quirk, preserved).
-    */
-  def surveyYear(schema: StructType, surveyPlaceholders: Seq[String],
-      suffixes: Seq[String] = RefConfig.SurveyYearSuffixes): Column = {
-    val branches = suffixes.map { suf =>
-      val any = surveyPlaceholders
-        .map { p =>
-          val name = p + suf
-          if (schema.fieldNames.contains(name)) nullIfMissing(col(s"`$name`"))
-          else lit(null).cast("string")
-        }
-        .foldLeft(lit(null).cast("string"))((acc, c) => coalesce(acc, c))
-      (any.isNotNull, lit(suf.stripPrefix("_")))
-    }
-    branches.foldRight(lit(Missing): Column) { case ((cond, value), els) =>
-      when(cond, value).otherwise(els)
-    }
-  }
-
   // ------------------------------------------------------- plain-Scala twins
-  // (driver-side use + property tests asserting Column/Scala agreement)
 
+  /** P1 twin. Strips spaces (U+0020) only, as Spark's `trim` does;
+    * `String.trim` would also strip tabs and other control chars.
+    */
   def normalizeMissingStr(v: String): String = {
     if (v == null) return Missing
-    val t = v.trim
+    val t = v.substring(v.indexWhere(_ != ' ') max 0, v.lastIndexWhere(_ != ' ') + 1)
     if (t.isEmpty || t.equalsIgnoreCase("N/A")) Missing else t
   }
 
   def formatNumberStr(v: String): String =
     if (v != null && v.matches("-?\\d+\\.0")) v.toDouble.toLong.toString else v
+
+  /** P4 twin: the first non-missing candidate (newest year first), else the sentinel. */
+  def yearCoalesceStr(candidates: Seq[String]): String =
+    candidates.iterator.map(normalizeMissingStr).find(_ != Missing).getOrElse(Missing)
+
+  /** P5 twin: the newest year whose candidates (one list per year) hold data. */
+  def surveyYearStr(candidates: Seq[Seq[String]]): String =
+    RefConfig.SurveyYearSuffixes.zip(candidates).collectFirst {
+      case (suf, vs) if yearCoalesceStr(vs) != Missing => suf.stripPrefix("_")
+    }.getOrElse(Missing)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import graft.core.RefConfig
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 import scala.util.matching.Regex
@@ -14,12 +11,11 @@ import scala.util.matching.Regex
   * (`src/program1_generate_markdowns.py:126-148`), `render_template`
   * (`:254-319`), `build_template_context` (`:151-180`).
   *
-  * Spark-first design: instead of a per-row UDF, the static template is split
-  * on the driver into literal segments and placeholder slots, and rendering
-  * becomes ONE `concat(lit(seg0), fmt(ctx(p1)), lit(seg1), ...)` expression —
-  * whole-stage-codegen'd, vectorizable, zero serialization overhead. This is
-  * the `Expression`-composition path of §7.2, reached without custom Catalyst
-  * code because the template is loop-invariant (driver data).
+  * The static template is split on the driver into literal segments and
+  * placeholder slots bound to row indexes ([[SchoolRenderer]]); a row then
+  * renders in one plain-Scala pass. One Column `concat` of the same render
+  * is the specs' parity oracle only: it takes seconds to plan, and whole-
+  * stage codegen never engages on its ~123-column rows (> maxFields).
   */
 object TemplateRender {
   val PlaceholderPattern: Regex = "\\{([a-zA-Z0-9_/]+)\\}".r
@@ -42,33 +38,42 @@ object TemplateRender {
     (pairs.toSeq, template.substring(last))
   }
 
-  /** F1 as a single concat Column. `context` maps placeholder name → Column;
-    * unresolved placeholders render as the missing sentinel; every
-    * substitution passes through F2 number formatting.
+  /** P6 + F1 for one school row, planned once on the driver: each
+    * placeholder slot holds the indexes (into [[columns]]) its value is
+    * read from. `SurveySchoolYear` is P5; a `SurveyAnswerCategory*` slot is
+    * P4 over its year-suffixed columns; any other slot is P1, which is P4
+    * over at most one column (absent → the missing sentinel). Every
+    * substitution passes through F2.
     */
-  def renderColumn(template: String, context: Map[String, Column]): Column = {
-    val (pairs, tail) = segments(template)
-    val parts = pairs.flatMap { case (seg, name) =>
-      val value = context.getOrElse(name, lit(Missing))
-      Seq(lit(seg), Normalize.formatNumber(value))
-    } :+ lit(tail)
-    concat(parts: _*)
-  }
+  final class SchoolRenderer(fieldNames: Seq[String], template: String) extends Serializable {
+    private val (pairs, tail) = segments(template)
+    private val literals = (pairs.map(_._1) :+ tail).toArray
+    private val suffixes = RefConfig.SurveyYearSuffixes
+    private val surveyPs = extractPlaceholders(template).filter(_.startsWith("SurveyAnswerCategory"))
+    private def present(names: Seq[String]) = names.filter(fieldNames.contains)
+    private val yearNames = suffixes.map(suf => present(surveyPs.map(_ + suf)))
+    // None: the P5 year; Some: P4 candidates, newest year first
+    private val slotNames = pairs.map { case (_, p) =>
+      if (p == "SurveySchoolYear") None
+      else Some(present(if (surveyPs.contains(p)) suffixes.map(p + _) else Seq(p)))
+    }
 
-  /** P6: the reference's context projection for a school row — SchoolCode via
-    * P1, SurveySchoolYear via P5, SurveyAnswerCategory* via P4, everything
-    * else via P1 (absent columns → sentinel).
-    */
-  def schoolContext(schema: StructType, placeholders: Seq[String]): Map[String, Column] = {
-    val surveyPs = placeholders.filter(_.startsWith("SurveyAnswerCategory"))
-    placeholders.map { p =>
-      val c =
-        if (p == "SchoolCode") Normalize.normalizeMissing(schema, p)
-        else if (p == "SurveySchoolYear") Normalize.surveyYear(schema, surveyPs)
-        else if (p.startsWith("SurveyAnswerCategory")) Normalize.yearCoalesce(schema, p)
-        else Normalize.normalizeMissing(schema, p)
-      p -> c
-    }.toMap + ("SchoolCode" -> Normalize.normalizeMissing(schema, "SchoolCode"))
+    /** The present columns a render reads; `render`'s `value(i)` is column `i`. */
+    val columns: Seq[String] = (slotNames.flatten.flatten ++ yearNames.flatten).distinct
+    private def indexes(names: Seq[String]) = names.map(columns.indexOf(_)).toArray
+    private val yearColumns = yearNames.map(indexes)
+    private val slots = slotNames.map(_.map(indexes)).toArray
+
+    /** Renders the row whose column `i` reads as `value(i)` (null for null). */
+    def render(value: Int => String): String = {
+      lazy val year = Normalize.surveyYearStr(yearColumns.map(_.map(value).toSeq))
+      val sb = new java.lang.StringBuilder(literals(0))
+      for (k <- slots.indices) {
+        val v = slots(k).fold(year)(is => Normalize.yearCoalesceStr(is.map(value).toSeq))
+        sb.append(Normalize.formatNumberStr(v)).append(literals(k + 1))
+      }
+      sb.toString
+    }
   }
 
   /** Plain-Scala render (driver-side + parity tests with the Column path). */

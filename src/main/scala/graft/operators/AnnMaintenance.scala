@@ -205,7 +205,7 @@ object AnnMaintenance {
     // safe because BOTH run under the index writer lease ([[IndexLease]],
     // acquired by this method's wrapper): a daemon appending concurrently
     // fails loudly at acquire instead of losing its row to the swap.
-    if (hasLog && spark.read.parquet(logDir).inputFiles.length > 16) {
+    if (hasLog && IndexFs.fileNames(logDir).count(_.endsWith(".parquet")) > 16) {
       val snap = spark.read.parquet(logDir).localCheckpoint()
       IncrementalDedup.clearStaging(s"$logDir.next")
       snap.coalesce(1).write.parquet(s"$logDir.next")

@@ -247,7 +247,7 @@ object IncrementalDedup {
       .localCheckpoint()
     if (add.isEmpty) return
     add.coalesce(1).write.mode("append").parquet(floorsDir)
-    if (spark.read.parquet(floorsDir).inputFiles.length > 16) {
+    if (IndexFs.fileNames(floorsDir).count(_.endsWith(".parquet")) > 16) {
       val snap = spark.read.parquet(floorsDir)
         .groupBy(col("id")).agg(max(col("below")).as("below"))
         .localCheckpoint()

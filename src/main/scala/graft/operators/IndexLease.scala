@@ -188,7 +188,7 @@ object IndexLease {
         renewals.put(key, renewer.scheduleWithFixedDelay(() => {
           val marker = leasePath(key)
           val log = org.slf4j.LoggerFactory.getLogger(getClass)
-          try {
+          try mon.synchronized { // no release between read and rewrite
             val mine = owned.get(key)
             if (mine == null) () // released between schedule and fire
             else {

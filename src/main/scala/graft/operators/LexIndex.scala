@@ -357,7 +357,7 @@ object LexIndex {
     if (n > 0) {
       batch.coalesce(1).write.mode("append").parquet(tsDir)
       // ledger hygiene: fold to latest-per-id past the file budget
-      if (spark.read.parquet(tsDir).inputFiles.length > 16) {
+      if (IndexFs.fileNames(tsDir).count(_.endsWith(".parquet")) > 16) {
         val folded = latestTs(spark, tsDir)
           .select(col("id"), col("below"),
             lit(nextAt).as("at")).localCheckpoint()

@@ -151,24 +151,17 @@ object ProductQuantizer {
       subDim: Int): Vector[Vector[Vector[Double]]] = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // pool of 8, measured (round-21 OptProbe, t118 warmed passes): 16
     // concurrent fits on local[32] DOUBLED the job time (12 s -> 21 s wall,
     // 25 s -> 122 s job-sum) — each fit spawns 32-task stages, so wave
     // width 8 already saturates the box and wider waves just time-slice.
     // Results are pool-size-independent (per-fit seeds, no shared state).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(m, 8))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val fits = (0 until m).map { s => Future {
-        val train = unit.select(
-          array_to_vector(slice(col("__u"), s * subDim + 1, subDim)).as("features"))
-        new KMeans().setK(nCodes).setSeed(42L + s).setMaxIter(10).fit(train)
-          .clusterCenters.map(_.toArray.toVector).toVector
-      } }
-      Await.result(Future.sequence(fits), Duration.Inf).toVector
-    } finally pool.shutdown()
+    graft.core.Par.all((0 until m).map { s => () =>
+      val train = unit.select(
+        array_to_vector(slice(col("__u"), s * subDim + 1, subDim)).as("features"))
+      new KMeans().setK(nCodes).setSeed(42L + s).setMaxIter(10).fit(train)
+        .clusterCenters.map(_.toArray.toVector).toVector
+    }, threads = 8).toVector
   }
 
   /** Deterministic training-sample cap: when the frame holds more than

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.core.RefConfig
 import graft.functions.{Normalize, TemplateRender}
 import graft.sinks.KeyedFileSink
 import graft.sources.SchoolCsv
@@ -13,10 +12,10 @@ import java.nio.charset.StandardCharsets
 /** Program 1 equivalent (SURVEY.md §3.1): CSV → one rendered Markdown file
   * per school.
   *
-  * Spark plan: `read.csv → filter(SchoolCode present) → select(render)` —
-  * the whole 110-placeholder context projection and template render fuse
-  * into one codegen'd `concat` expression (see TemplateRender), then a
-  * keyed-file sink. No shuffle anywhere; scales linearly with input splits.
+  * Spark plan: `read.csv → filter(SchoolCode present) → last-wins dedup →
+  * map(render)` then a keyed-file sink; the render is one plain-Scala pass
+  * per winner row ([[TemplateRender.SchoolRenderer]]). The only shuffle is
+  * the 2-column winner aggregation; scales linearly with input splits.
   */
 object MarkdownJob {
 
@@ -25,6 +24,7 @@ object MarkdownJob {
   /** @return count of markdown files written (reference A1 semantics). */
   def run(spark: SparkSession, csvPath: String, templatePath: String,
       outDir: String): Result = {
+    import spark.implicits._
     // S5: template is driver data, loaded once; ≥1 placeholder required
     // (`src/program1_generate_markdowns.py:322-341`).
     val template = new String(
@@ -33,15 +33,13 @@ object MarkdownJob {
     require(placeholders.nonEmpty, s"No placeholders found in template: $templatePath")
 
     val rows = SchoolCsv.read(spark, csvPath)
-    if (!rows.schema.fieldNames.contains("SchoolCode")) return Result(0)
+    val fields = rows.schema.fieldNames.toSeq
+    if (!fields.contains("SchoolCode")) return Result(0)
 
-    val schema = rows.schema
-    val context = TemplateRender.schoolContext(schema, placeholders)
     // internal name that cannot case-insensitively collide with (and
     // replace) a real CSV column — render must see the RAW row values
-    val keyed = rows
-      .filter(Normalize.normalizeMissing(schema, "SchoolCode") =!= Normalize.Missing)
-      .withColumn("_graft_code", Normalize.normalizeMissing(schema, "SchoolCode"))
+    val code = Normalize.normalizeMissing(col("SchoolCode"))
+    val keyed = rows.filter(code =!= Normalize.Missing).withColumn("_graft_code", code)
 
     // Reference: each row overwrites `{code}.md` in file order, so the LAST
     // duplicate's content survives (`program1_generate_markdowns.py:382-388`).
@@ -55,10 +53,19 @@ object MarkdownJob {
     val winners = keyed
       .groupBy(col("_graft_code"))
       .agg(max(col("_file_order")).as("_file_order"))
+    val renderer = new TemplateRender.SchoolRenderer(fields, template)
+    // only the rendered columns cross the join; renderer column i is row
+    // field i + 1, read as InternalRows (no Row deserializer to compile)
     val rendered = keyed
       .join(winners, Seq("_graft_code", "_file_order"))
-      .select(col("_graft_code").as("school_code"),
-        TemplateRender.renderColumn(template, context).as("doc"))
+      .select(col("_graft_code") +: renderer.columns.map(f =>
+        col("`" + f.replace("`", "``") + "`").cast("string")): _*)
+      .queryExecution.toRdd.map { r =>
+        (r.getUTF8String(0).toString, renderer.render { i =>
+          val v = r.getUTF8String(i + 1)
+          if (v == null) null else v.toString
+        })
+      }.toDF("school_code", "doc")
 
     Result(KeyedFileSink.write(rendered, "school_code", "doc", outDir, ".md"))
   }

@@ -40,24 +40,36 @@ object SchoolCsv {
 
   /** S3/S4: directory of per-key documents → DataFrame[key, content].
     * `suffix` is stripped from the filename to recover the key (e.g.
-    * `_ai_description.md` or `.md`). A missing dir or zero matching files
-    * yields an empty frame (the reference treats both as "no descriptions"),
-    * checked driver-side so the lazy glob can't explode at action time.
+    * `_ai_description.md` or `.md`). A missing dir yields an empty frame
+    * (the reference treats it as "no descriptions"), checked driver-side so
+    * the lazy read can't explode at action time; an empty dir reads empty.
+    *
+    * The dir itself is read with `pathGlobFilter`: ONE root path, listed on
+    * the driver (a `*suffix` glob is a root path per file, listed past 32
+    * by a job of one task per file). `_`/`.`-prefixed files are skipped.
+    * The listing recurses (`recursiveFileLookup` only stops partition
+    * inference), so keys are anchored at the dir: subfolder files drop out.
+    * Files are read by the `binaryFile` source, whose bytes are cast to a
+    * string unchanged, as `wholetext` did: the `wholetext` reader copies the
+    * Hadoop configuration once per file, a fifth of the school chain's
+    * executor CPU, and made that chain's run time vary.
     */
   def readDocumentDir(spark: SparkSession, dir: String, suffix: String): DataFrame = {
     import spark.implicits._
-    val glob = new org.apache.hadoop.fs.Path(s"$dir/*$suffix")
-    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matches = try fs.globStatus(glob) catch { case _: java.io.IOException => null }
-    if (matches == null || matches.isEmpty)
-      return Seq.empty[(String, String)].toDF("key", "content")
-    val quoted = java.util.regex.Pattern.quote(suffix)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) return Seq.empty[(String, String)].toDF("key", "content")
+    val root = fs.makeQualified(path).toUri.toString.stripSuffix("/") + "/"
+    import java.util.regex.Pattern.quote
+    val keyPattern = "^" + quote(root) + "([^/]+)" + quote(suffix) + "$"
     spark.read
-      .option("wholetext", "true")
-      .text(s"$dir/*$suffix")
+      .format("binaryFile")
+      .option("pathGlobFilter", s"*$suffix")
+      .option("recursiveFileLookup", "true")
+      .load(dir)
       .select(
-        regexp_extract(input_file_name(), s"([^/]+)$quoted$$", 1).as("key"),
-        col("value").as("content"))
+        regexp_extract(input_file_name(), keyPattern, 1).as("key"),
+        col("content").cast("string").as("content"))
       .filter(col("key") =!= "")
   }
 }

@@ -30,8 +30,12 @@ class NormalizeSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("P1 Column path agrees with Scala path") {
-    val inputs = Seq("  123  ", "N/A", "n/A", "", "  ", "Över medel", "31.6", "x")
+    val inputs = Seq("  123  ", "N/A", "n/A", "", "  ", "Över medel", "31.6", "x",
+      // Spark's trim strips spaces only: tabs, newlines and NBSP survive
+      "\tx\t", "\t", " \tN/A\t ", "\nx\n", "\n", "\u00a0x\u00a0", "\u00a0", " N/A\u00a0")
     assert(colNorm(inputs) == inputs.map(Normalize.normalizeMissingStr))
+    assert(Normalize.normalizeMissingStr("\tx\t") == "\tx\t")
+    assert(Normalize.normalizeMissingStr("\t") == "\t")
   }
 
   test("F2 number format doctest cases") {
@@ -59,9 +63,11 @@ class NormalizeSpec extends SparkSpec with TableDrivenPropertyChecks {
       ("85", "80"), ("", "72"), ("N/A", ""), ("", ""))
       .toDF("SurveyAnswerCategory_Math_2023/2024", "SurveyAnswerCategory_Math_2022/2023")
     val got = df
-      .select(Normalize.yearCoalesce(df.schema, "SurveyAnswerCategory_Math"))
+      .select(ColumnRender.yearCoalesce(df.schema, "SurveyAnswerCategory_Math"))
       .as[String].collect().toSeq
     assert(got == Seq("85", "72", "[Data Saknas]", "[Data Saknas]"))
+    assert(df.collect().map(r => Normalize.yearCoalesceStr(Seq(r.getString(0), r.getString(1))))
+      .toSeq == got)
   }
 
   test("P5 survey year: newest year with ANY data wins; value may still fall back") {
@@ -72,12 +78,17 @@ class NormalizeSpec extends SparkSpec with TableDrivenPropertyChecks {
       .toDF(
         "SurveyAnswerCategoryA_2023/2024", "SurveyAnswerCategoryA_2022/2023",
         "SurveyAnswerCategoryB_2023/2024", "SurveyAnswerCategoryB_2022/2023")
-    val year = Normalize.surveyYear(df.schema,
+    val year = ColumnRender.surveyYear(df.schema,
       Seq("SurveyAnswerCategoryA", "SurveyAnswerCategoryB"))
     assert(df.select(year).as[String].collect().toSeq ==
       Seq("2023/2024", "2022/2023", "[Data Saknas]"))
     // the P5-vs-P4 mismatch quirk: year says 2023/2024 but B's value fell back
-    val bVal = Normalize.yearCoalesce(df.schema, "SurveyAnswerCategoryB")
+    val bVal = ColumnRender.yearCoalesce(df.schema, "SurveyAnswerCategoryB")
     assert(df.select(bVal).as[String].collect().head == "70")
+    // Scala twins: candidates per suffix, newest first
+    val scalaYears = df.collect().toSeq.map(r => Normalize.surveyYearStr(
+      Seq(Seq(r.getString(0), r.getString(2)), Seq(r.getString(1), r.getString(3)))))
+    assert(scalaYears == Seq("2023/2024", "2022/2023", "[Data Saknas]"))
+    assert(Normalize.yearCoalesceStr(Seq("", "70")) == "70")
   }
 }

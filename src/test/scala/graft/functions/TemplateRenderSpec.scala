@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference doctests for P7/F1
-  * (`src/program1_generate_markdowns.py:126-148`, `:254-319`) on both the
-  * plain-Scala and codegen'd Column render paths.
+  * (`src/program1_generate_markdowns.py:126-148`, `:254-319`) on both
+  * plain-Scala render paths, and holds the school row renderer to the Column
+  * oracle ([[ColumnRender]]).
   */
 class TemplateRenderSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +39,7 @@ class TemplateRenderSpec extends SparkSpec {
       "SchoolName" -> col("SchoolName"),
       "SchoolCode" -> col("SchoolCode"),
       "Score" -> col("Score"))
-    val got = df.select(TemplateRender.renderColumn(tpl, ctx)).as[String].collect()
+    val got = df.select(ColumnRender.renderColumn(tpl, ctx)).as[String].collect()
     val want = df.collect().map { r =>
       TemplateRender.renderString(tpl, Map(
         "SchoolName" -> r.getString(0), "SchoolCode" -> r.getString(1),
@@ -51,8 +52,30 @@ class TemplateRenderSpec extends SparkSpec {
     val df = Seq(("  abc  ", "Medel", "", "Namn"))
       .toDF("SchoolCode", "SurveyAnswerCategoryQ_2023/2024", "SurveyAnswerCategoryR_2023/2024", "SchoolName")
     val tpl = "{SchoolCode}|{SurveyAnswerCategoryQ}|{SurveyAnswerCategoryR}|{SurveySchoolYear}|{SchoolName}|{NumberOfNearbySchools}"
-    val ctx = TemplateRender.schoolContext(df.schema, TemplateRender.extractPlaceholders(tpl))
-    val got = df.select(TemplateRender.renderColumn(tpl, ctx)).as[String].collect().head
+    val ctx = ColumnRender.schoolContext(df.schema, TemplateRender.extractPlaceholders(tpl))
+    val got = df.select(ColumnRender.renderColumn(tpl, ctx)).as[String].collect().head
     assert(got == "abc|Medel|[Data Saknas]|2023/2024|Namn|[Data Saknas]")
+  }
+
+  test("SchoolRenderer agrees with the Column oracle on P1/P4/P5/F2 edge cells") {
+    val cols = Seq("SchoolCode", "SchoolName", "Score", "Neg",
+      "SurveyAnswerCategoryQ_2023/2024", "SurveyAnswerCategoryQ_2022/2023",
+      "SurveyAnswerCategoryR_2022/2023")
+    val rows = Seq(
+      Seq(" a1 ", "\tTab\t", "007.0", "-0.0", "", "Medel", "n/a"),
+      Seq("a2", " \u00a0 ", "10.00", "-3.0", " N/A ", "", ""),
+      Seq("a3", null, "\n", "1e3.0", "Hög", null, "Låg"),
+      Seq("a4", "[Data Saknas]", " 12.0 ", "x.0", null, null, null))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(org.apache.spark.sql.Row.fromSeq)),
+      org.apache.spark.sql.types.StructType(cols.map(c =>
+        org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType))))
+    val tpl = "{SchoolCode}|{SchoolName}|{Score}|{Neg}|{SurveyAnswerCategoryQ}|" +
+      "{SurveyAnswerCategoryR}|{SurveyAnswerCategoryS}|{SurveySchoolYear}|{Absent}|{bad one}"
+    val ctx = ColumnRender.schoolContext(df.schema, TemplateRender.extractPlaceholders(tpl))
+    val want = df.select(ColumnRender.renderColumn(tpl, ctx)).as[String].collect().toSeq
+    val renderer = new TemplateRender.SchoolRenderer(cols, tpl)
+    assert(renderer.columns.toSet == cols.toSet)
+    assert(rows.map(r => renderer.render(i => r(cols.indexOf(renderer.columns(i))))) == want)
   }
 }

@@ -11,6 +11,7 @@ import java.nio.charset.StandardCharsets
   * ordinals) through the complete markdown → enrich → site chain.
   */
 class WideCsvSpec extends SparkSpec {
+  import WideCsvSpec._
 
   private def write(path: String, content: String): Unit = {
     val p = Paths.get(path)
@@ -19,35 +20,6 @@ class WideCsvSpec extends SparkSpec {
   }
   private def read(path: String): String =
     new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
-
-  /** 122 columns: identity + counts + stages + enrollment + demographics +
-    * results + ordinals + history year-prefixed + survey year-suffixed.
-    */
-  private val surveyQs = Seq(
-    "SurveyAnswerCategoryParentsRegardingParentsSatisfactionWithTheirChildsSchool",
-    "SurveyAnswerCategoryTeachersRegardingNecessaryDevelopmentMeasures",
-    "SurveyAnswerCategoryGrade8RegardingStudentSafety",
-    "SurveyAnswerCategoryGrade5RegardingStudentSatisfaction")
-  private val headers: Seq[String] = {
-    val base = Seq("SchoolCode", "SchoolName", "SchoolNameWithMunicipality",
-      "SchoolOrganisation", "SchoolStages", "TotalNumberOfStudents",
-      "StudentTeacherRatio", "TeacherQualificationPercentage",
-      "ForeignBackgroundComparison", "ResultGrade6AverageScore",
-      "ResultCategoryGrade9AverageScore", "FirstSchoolyearInCurrentRecords")
-    val grades = (1 to 9).map(g => s"Grade${g}NumberOfStudents")
-    val history = for {
-      yr <- Seq("1819", "1920", "2021", "2122", "2223")
-      m <- Seq("TotalNumberOfStudents", "ResultGrade6AverageScore",
-        "ResultCategoryGrade6AverageScore")
-    } yield s"$yr$m"
-    val survey = for {
-      q <- surveyQs
-      suf <- Seq("_2023/2024", "_2022/2023")
-    } yield s"$q$suf"
-    val filler = (1 to (122 - base.size - grades.size - history.size - survey.size))
-      .map(i => s"ExtraMetric$i")
-    base ++ grades ++ history ++ survey ++ filler
-  }
 
   test("synthetic schema is the real width") { assert(headers.size == 122) }
 
@@ -125,5 +97,36 @@ class WideCsvSpec extends SparkSpec {
     assert(html.contains("Vidaskolan"))
     assert(html.contains("School (Code: wide2)"))
     assert(html.contains("Sammanfattning")) // enriched description flowed through
+  }
+}
+
+object WideCsvSpec {
+  /** 122 columns: identity + counts + stages + enrollment + demographics +
+    * results + ordinals + history year-prefixed + survey year-suffixed.
+    */
+  val surveyQs = Seq(
+    "SurveyAnswerCategoryParentsRegardingParentsSatisfactionWithTheirChildsSchool",
+    "SurveyAnswerCategoryTeachersRegardingNecessaryDevelopmentMeasures",
+    "SurveyAnswerCategoryGrade8RegardingStudentSafety",
+    "SurveyAnswerCategoryGrade5RegardingStudentSatisfaction")
+  val headers: Seq[String] = {
+    val base = Seq("SchoolCode", "SchoolName", "SchoolNameWithMunicipality",
+      "SchoolOrganisation", "SchoolStages", "TotalNumberOfStudents",
+      "StudentTeacherRatio", "TeacherQualificationPercentage",
+      "ForeignBackgroundComparison", "ResultGrade6AverageScore",
+      "ResultCategoryGrade9AverageScore", "FirstSchoolyearInCurrentRecords")
+    val grades = (1 to 9).map(g => s"Grade${g}NumberOfStudents")
+    val history = for {
+      yr <- Seq("1819", "1920", "2021", "2122", "2223")
+      m <- Seq("TotalNumberOfStudents", "ResultGrade6AverageScore",
+        "ResultCategoryGrade6AverageScore")
+    } yield s"$yr$m"
+    val survey = for {
+      q <- surveyQs
+      suf <- Seq("_2023/2024", "_2022/2023")
+    } yield s"$q$suf"
+    val filler = (1 to (122 - base.size - grades.size - history.size - survey.size))
+      .map(i => s"ExtraMetric$i")
+    base ++ grades ++ history ++ survey ++ filler
   }
 }
