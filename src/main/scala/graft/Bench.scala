@@ -29,6 +29,55 @@ import org.apache.spark.sql.SparkSession
   *     broken query's fast-fail read as a 10x speedup inside an rc-0 record).
   */
 object Bench {
+  private[graft] def compact(decimals: Int)(v: Double): String = {
+    val s = String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+    if (decimals == 0) s // "0" has no trailing-zero fraction to trim
+    else {
+      val t = s.reverse.dropWhile(_ == '0').reverse
+      if (t.endsWith(".")) t + "0" else t
+    }
+  }
+
+  /** Zero-preserving rung (round-20 verdict #2): a sub-0.5 s row printed
+    * "0" at the 0-decimal rung read as dropped_from_bench in the driver's
+    * round-over-round comparator — 17 improvements miscounted as drops.
+    * ONLY rows that would print "0" spend extra chars (2 per row); rows
+    * >= 0.5 s keep the integer rendering prior rounds are compared on.
+    * (A uniform >= 1-decimal dict measured 1860 chars at 187 queries —
+    * over the 1850 tail budget; this variant measured 1766.)
+    */
+  private[graft] def adaptive(v: Double): String =
+    if (v >= 0.5) compact(0)(v)
+    else if (v >= 0.05) compact(1)(v)
+    else if (v >= 0.005) compact(2)(v)
+    else compact(3)(v)
+
+  /** The contract line's format ladder: the first candidate within
+    * `budget` chars (1850 ≈ the driver's 2000-char tail minus sbt's
+    * "[success] Total time: ..." trailer), else the shortest rung.
+    *
+    * Past ~95 queries the full-name dict exceeds the budget even at 0
+    * decimals, so the ladder gains short names BEFORE dropping precision
+    * to zero: the qNN/tNN prefix is unique across the registry and shrinks
+    * each entry ~3x (full names at full precision stay on the bench-detail
+    * line). Every zero-preserving rung — full names, then short names —
+    * comes before any `compact(0)` rung, so a sub-0.5 s row prints `0`
+    * only when nothing else fits.
+    */
+  private[graft] def fitLine(med: Seq[(String, Double)],
+      line: Seq[(String, Double)] => (Double => String) => String,
+      budget: Int = 1850): String = {
+    val shortMed = med.map { case (k, v) => k.takeWhile(_ != '_') -> v }
+    val names =
+      if (shortMed.map(_._1).distinct.size == med.size) Seq(med, shortMed)
+      else Seq(med)
+    val fine: Seq[Double => String] =
+      Seq(compact(3), compact(2), compact(1), adaptive)
+    val candidates = names.flatMap(kvs => fine.map(line(kvs))) ++
+      names.map(kvs => line(kvs)(compact(0)))
+    candidates.find(_.length <= budget).getOrElse(candidates.last)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -63,14 +112,6 @@ object Bench {
     }
     def jsonObj(kvs: Seq[(String, Double)], fmt: Double => String): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    def compact(decimals: Int)(v: Double): String = {
-      val s = String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
-      if (decimals == 0) s // "0" has no trailing-zero fraction to trim
-      else {
-        val t = s.reverse.dropWhile(_ == '0').reverse
-        if (t.endsWith(".")) t + "0" else t
-      }
-    }
     // "sf":0.1 (parsed from the dir name) is 18 chars cheaper than the path.
     val sfToken = "sf([0-9.]+)/*$".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("\"" + sfDir + "\"")
     /** Print the contract line over every query timed so far (partial during
@@ -105,30 +146,7 @@ object Bench {
       // stdout tail INCLUDING sbt's trailing "[success] ..." line.
       def line(kvs: Seq[(String, Double)])(fmt: Double => String): String =
         s"""{"metric":"total","value":${compact(3)(total)},"unit":"sec","graded_total":${compact(3)(gradedTotal)},"gate_total":${compact(3)(gateTotal)},"total_min":${compact(3)(totalMin)},"queries":${jsonObj(kvs, fmt)}$errTok,"sf":$sfToken}"""
-      // Zero-preserving rung (round-20 verdict #2): a sub-0.5 s row printed
-      // "0" at the 0-decimal rung read as dropped_from_bench in the driver's
-      // round-over-round comparator — 17 improvements miscounted as drops.
-      // ONLY rows that would print "0" spend extra chars (2 per row); rows
-      // >= 0.5 s keep the integer rendering prior rounds are compared on.
-      // (A uniform >= 1-decimal dict measured 1860 chars at 187 queries —
-      // over the 1850 tail budget; this variant measured 1766.)
-      def adaptive(v: Double): String =
-        if (v >= 0.5) compact(0)(v)
-        else if (v >= 0.05) compact(1)(v)
-        else if (v >= 0.005) compact(2)(v)
-        else compact(3)(v)
-      // Past ~95 queries the full-name dict exceeds the tail budget even at
-      // 0 decimals, so the ladder gains a rung BEFORE dropping coverage: the
-      // qNN/tNN prefix is unique across the registry and shrinks each entry
-      // ~3x. Full names at full precision stay on the bench-detail line.
-      val shortMed = med.map { case (k, v) => k.takeWhile(_ != '_') -> v }
-      val shortOk = shortMed.map(_._1).distinct.size == med.size
-      val fmts: Seq[Double => String] =
-        Seq(compact(3), compact(2), compact(1), adaptive, compact(0))
-      val candidates =
-        fmts.map(line(med)) ++ (if (shortOk) fmts.map(line(shortMed)) else Nil)
-      // 1850 ≈ 2000-char tail minus sbt's "[success] Total time: ..." trailer
-      println(candidates.find(_.length <= 1850).getOrElse(candidates.last))
+      println(fitLine(med, line))
       System.out.flush()
     }
     def emitDetail(passesDone: Int): Unit = {

@@ -211,8 +211,8 @@ case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
 
 object SrpSignatureImpl {
   /** One-pass sign-random-projection signature over hyperplane rows
-    * [offset, offset + bits). Bit-parity twin of the HOF construction in
-    * `Similarity.srpSignatureHof`: hyperplane component (i, j) =
+    * [offset, offset + bits). Bit-parity twin of the HOF construction
+    * kept in the specs (`HofTwins.srpSignature`): hyperplane component (i, j) =
     * pmod(xxhash64(i, j), 1e6)/1e6 - 0.5 where `xxhash64(i, j)` folds int
     * args sequentially from seed 42 (hashInt(j, hashInt(i, 42))); dot runs
     * in double, element order; result bit (i - offset) set iff the dot for
@@ -354,8 +354,8 @@ object L2SqDistancesImpl {
   /** Squared-L2 distance from one vector to each centroid row, double
     * precision, element-order folds — bit-identical to the HOF chain
     * `aggregate(zip_with(vec, lit(c), (x, cv) => (x-cv)*(x-cv)), 0.0, +)`
-    * per centroid (`Clustering.distancesHof`). The input vector is read
-    * once into a local double[] so the k centroid loops run over primitive
+    * per centroid (the spec twin `HofTwins.distances`). The input vector
+    * is read once into a local double[] so the k centroid loops run over primitive
     * arrays instead of k× ArrayData accessor dispatch. A vector/centroid
     * dimension mismatch THROWS (a loud usage error) — silently truncating
     * would turn an upstream dimension bug into plausible wrong distances,

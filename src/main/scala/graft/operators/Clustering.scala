@@ -34,20 +34,13 @@ object Clustering {
       iters: Int)
 
   /** Squared-L2 distances to each centroid as an array column. Native
-    * one-pass expression (codegen'd); [[distancesHof]] is the built-in-
-    * functions construction kept for the bit-parity spec — higher-order
-    * functions are CodegenFallback, and k interpreted lambda-tree
-    * evaluations per row dominated the kmeans-family queries' wall-clock.
+    * one-pass expression (codegen'd); the built-in-functions construction
+    * it replaced is the bit-parity spec's twin — higher-order functions
+    * are CodegenFallback, and k interpreted lambda-tree evaluations per
+    * row dominated the kmeans-family queries' wall-clock.
     */
   private def distances(vec: Column, centroids: Array[Array[Double]]): Column =
     graft.expressions.GraftFunctions.l2sqDistances(vec, centroids)
-
-  private[operators] def distancesHof(vec: Column, centroids: Array[Array[Double]]): Column =
-    array(centroids.map { c =>
-      aggregate(
-        zip_with(vec, typedLit(c.toSeq), (x, cv) => (x - cv) * (x - cv)),
-        lit(0.0), (acc, d) => acc + d)
-    }: _*)
 
   /** Nearest-centroid assignment: `id`, `cluster` (0-based), `dist2`. */
   def assign(df: DataFrame, idCol: Column, vecCol: Column,

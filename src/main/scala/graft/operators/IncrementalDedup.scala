@@ -138,14 +138,18 @@ object IncrementalDedup {
     * tombstone table exists). Heals a crashed tombstone-rewrite swap
     * first — its crash window leaves no live table but a complete
     * `.old`, and without the rollback every deleted key would silently
-    * resurface.
+    * resurface. The keys-only table is read with its known schema, the
+    * key typed like `df`'s key column — no schema-inference job per read.
     */
   private[graft] def applyTombstones(spark: org.apache.spark.sql.SparkSession,
       tsDir: String, df: DataFrame, keyCol: String): DataFrame = {
     recoverDir(tsDir)
     if (!IndexFs.exists(tsDir)) df
     else df.join(
-      broadcast(spark.read.parquet(tsDir).select(col(keyCol)).distinct()),
+      broadcast(spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(keyCol,
+            df.schema(keyCol).dataType))))
+        .parquet(tsDir).distinct()),
       Seq(keyCol), "left_anti")
   }
 

@@ -83,6 +83,36 @@ object IndexFs {
     else fs.listStatus(path).toSeq.filter(_.isFile).map(_.getPath.getName)
   }
 
+  /** The Spark schema that Spark's writer stored in the footer of the
+    * first parquet data file under `p` (depth-first through partition
+    * dirs), read on the driver — no Spark job. Index readers take the
+    * columns whose type the CALLER chose (the id and vector columns) from
+    * it; every other column of an index table has a type fixed by its
+    * writer.
+    */
+  def footerSchema(p: String): org.apache.spark.sql.types.StructType = {
+    val conf = hadoopConf()
+    val root = new Path(p)
+    val fs = root.getFileSystem(conf)
+    def visible(s: org.apache.hadoop.fs.FileStatus) =
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    def firstFile(dir: Path): Option[Path] = {
+      val (files, dirs) = fs.listStatus(dir).toSeq.filter(visible)
+        .sortBy(_.getPath.getName).partition(_.isFile)
+      files.find(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
+        .orElse(dirs.iterator.flatMap(d => firstFile(d.getPath)).nextOption())
+    }
+    val file = firstFile(root).getOrElse(
+      throw new IllegalStateException(s"no parquet data file under $p"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try org.apache.spark.sql.types.DataType.fromJson(reader.getFooter
+        .getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    finally reader.close()
+  }
+
   /** Write a small UTF-8 text artifact (tokenizer merges, lease markers),
     * overwriting any existing file — resolved through the path's
     * filesystem like every other lifecycle touch, so the artifact can

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted LEXICAL (BM25) index tier — the posting-slice analog of the
   * IVF layouts, so full-text retrieval stops re-scanning the corpus per
@@ -25,7 +26,8 @@ import org.apache.spark.sql.functions._
   *  - `stats/` — APPEND-ONLY `(n, sumdl)` rows, one per build/append batch;
   *    readers SUM them (both are additive — the same fold-on-read
   *    discipline as the delta indexes, so appends never read-modify-write
-  *    shared state). `sumdl` is decimal(20,0): exact, order-insensitive.
+  *    shared state). `sumdl` is the decimal(30,0) sum of decimal(20,0)
+  *    lengths: exact, order-insensitive.
   *  - `meta/` — one row `(nbuckets)`: the partitioning constant queries
   *    must reproduce to prune.
   *  - `tombstones/` — the VERSIONED takedown/replace ledger (round 19):
@@ -99,8 +101,18 @@ object LexIndex {
       terms.indices.map(row.getString)
     }
 
-  private def bucketOf(term: Column, nBuckets: Int): Column =
+  private[operators] def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(hash(term), lit(nBuckets))
+
+  /** [[bucketOf]] for a query term, evaluated on the driver: the same
+    * Catalyst expressions (`pmod` of the seed-42 Murmur3 `hash`) over a
+    * literal, so no Spark job computes a query's buckets.
+    */
+  private[operators] def bucketOfTerm(term: String, nBuckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
+    Pmod(new Murmur3Hash(Seq(Literal(term))), Literal(nBuckets)).eval()
+      .asInstanceOf[Int]
+  }
 
   /** Batch → its `(bucket, term, id, tf, dl, positions)` posting rows +
     * `(id, dl)` doc lengths. One posexplode, one map-side-combining
@@ -139,12 +151,14 @@ object LexIndex {
     * more partition column and ignore it; bucket pruning is unaffected.
     */
   private def writeBatch(postings: DataFrame, doclens: DataFrame,
-      indexDir: String, nBuckets: Int, batchId: Long): Unit = {
+      indexDir: String, batchId: Long): Unit = {
     // co-locate each bucket before the partitioned write — without the
     // repartition every task writes a file into every bucket dir
-    // (tasks × buckets small files); with it the file count is bounded
-    // by the bucket count per batch
-    postings.repartition(nBuckets, col("bucket"))
+    // (tasks × buckets small files); with it each bucket lands in one
+    // task, so a batch writes at most one file per bucket dir. No fixed
+    // partition count: AQE coalesces a by-column shuffle to the batch's
+    // size, so a 6-document append does not run a 64-task stage
+    postings.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$indexDir/postings/batch=$batchId")
     doclens.write.mode("overwrite").parquet(s"$indexDir/doclens/batch=$batchId")
@@ -153,6 +167,29 @@ object LexIndex {
     stats.coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/stats/batch=$batchId")
   }
+
+  /** The schemas [[writeBatch]] writes, for readers that must not infer
+    * them (inference is a Spark job per read). `id` keeps the caller's id
+    * type ([[idTypeOf]]); `batch` and `bucket` are the partition columns.
+    */
+  private def postingsSchema(id: DataType, withPositions: Boolean) =
+    StructType(Seq(StructField("id", id), StructField("dl", LongType),
+      StructField("term", StringType), StructField("tf", LongType)) ++
+      (if (withPositions)
+        Seq(StructField("positions", ArrayType(IntegerType)))
+      else Nil) ++
+      Seq(StructField("batch", LongType), StructField("bucket", IntegerType)))
+  private def doclensSchema(id: DataType) = StructType(Seq(
+    StructField("id", id), StructField("dl", LongType),
+    StructField("batch", LongType)))
+  private val StatsSchema = StructType(Seq(StructField("n", LongType),
+    StructField("sumdl", DecimalType(30, 0)), StructField("batch", LongType)))
+
+  /** The id type the index stores: the caller's id column, written as-is,
+    * read from one doclens footer on the driver.
+    */
+  private def idTypeOf(root: String): DataType =
+    IndexFs.footerSchema(s"$root/doclens")("id").dataType
 
   /** Build the index over `docs` into `indexDir` (fresh-dir contract, like
     * `ivfBuild`). `nBuckets` trades partition-pruning granularity against
@@ -180,11 +217,15 @@ object LexIndex {
       IncrementalDedup.recoverDir(indexDir)
       val (postings, doclens) =
         derive(docs, idCol, textCol, nBuckets, analyzer, withPositions)
-      writeBatch(postings, doclens, indexDir, nBuckets, batchId = -1L)
+      writeBatch(postings, doclens, indexDir, batchId = -1L)
       Seq((nBuckets, analyzer, withPositions))
         .toDF("nbuckets", "analyzer", "positions")
         .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
     }
+
+  /** The schema [[build]] writes `meta` with. */
+  private val MetaSchema = StructType(Seq(StructField("nbuckets", IntegerType),
+    StructField("analyzer", StringType), StructField("positions", BooleanType)))
 
   /** Append a batch of NEW documents (ids unique across the index's
     * lifetime — the caller contract every index here shares). df, N and
@@ -223,7 +264,7 @@ object LexIndex {
       val (postings, doclens) =
         derive(docs, idCol, textCol, nBuckets, analyzer, withPositions)
       val n = doclens.count()
-      if (n > 0) writeBatch(postings, doclens, root, nBuckets, bid)
+      if (n > 0) writeBatch(postings, doclens, root, bid)
       n
     }
 
@@ -268,7 +309,7 @@ object LexIndex {
       // only FULL deletions (latest entry = delete) defer — an id whose
       // latest entry is an UPSERT version floor is alive and re-ingests
       // through [[upsert]]
-      val tomb = broadcast(latestTs(spark, t)
+      val tomb = broadcast(latestTs(spark, t, docs.schema(idCol).dataType)
         .where(col("below") === Long.MaxValue).select(col("id")).distinct())
       (docs.join(tomb.withColumnRenamed("id", idCol), Seq(idCol), "left_anti"),
         docs.join(tomb.withColumnRenamed("id", idCol), Seq(idCol), "left_semi"))
@@ -281,7 +322,9 @@ object LexIndex {
     IncrementalDedup.recoverDir(t)
     if (!IndexFs.exists(t)) return
     val sample = docs.select(col(idCol).as("id")).distinct()
-      .join(broadcast(spark.read.parquet(t).select(col("id")).distinct()),
+      .join(broadcast(spark.read
+          .schema(tombstoneSchema(docs.schema(idCol).dataType)).parquet(t)
+          .select(col("id")).distinct()),
         Seq("id"), "left_semi")
       .limit(4).collect().map(_.get(0))
     require(sample.isEmpty,
@@ -296,26 +339,28 @@ object LexIndex {
     * with `batch < below` are hidden; `Long.MaxValue` = full deletion),
     * `at` a monotonically increasing stamp so the LATEST entry per id
     * wins (that is how [[upsert]] resurrects a deleted id: its new entry
-    * outranks the deletion). Legacy id-only tables read as
-    * (below = MaxValue, at = 0) — exactly what those deletes meant — and
-    * are migrated in place on the first versioned write. Folded to
-    * latest-per-id past a small file budget (the ledger hygiene every
-    * delete table here has).
+    * outranks the deletion). Read with its known schema, the key typed
+    * like the data's `id`; legacy id-only rows read their missing columns
+    * as null, which maps to (below = MaxValue, at = 0) — exactly what
+    * those deletes meant — and such tables are migrated in place on the
+    * first versioned write. Folded to latest-per-id past a small file
+    * budget (the ledger hygiene every delete table here has).
     */
-  private[operators] def latestTs(spark: SparkSession,
-      tsDir: String): DataFrame = {
-    val raw = spark.read.parquet(tsDir)
-    val v0 = if (raw.columns.contains("below")) raw
-      else raw.withColumn("below", lit(Long.MaxValue))
-    val v = if (v0.columns.contains("at")) v0
-      else v0.withColumn("at", lit(0L))
+  private[operators] def latestTs(spark: SparkSession, tsDir: String,
+      idType: DataType): DataFrame =
     // latest entry per id: max (at, below) — `at` strictly increases
     // under the writer lease; the `below` tiebreak only orders legacy
     // all-at-0 rows (all deletions) deterministically
-    v.groupBy(col("id"))
-      .agg(max(struct(col("at"), col("below"))).as("__e"))
+    spark.read.schema(tombstoneSchema(idType)).parquet(tsDir)
+      .groupBy(col("id"))
+      .agg(max(struct(coalesce(col("at"), lit(0L)).as("at"),
+        coalesce(col("below"), lit(Long.MaxValue)).as("below"))).as("__e"))
       .select(col("id"), col("__e.below").as("below"))
-  }
+
+  /** The schema [[writeTsEntries]] writes the ledger with. */
+  private def tombstoneSchema(id: DataType) = StructType(Seq(
+    StructField("id", id), StructField("below", LongType),
+    StructField("at", LongType)))
 
   /** Hide rows their id's latest version floor excludes. `df` must carry
     * the `batch` partition column; a no-op plan when no table exists.
@@ -324,7 +369,8 @@ object LexIndex {
       df: DataFrame): DataFrame = {
     IncrementalDedup.recoverDir(tsDir)
     if (!IndexFs.exists(tsDir)) df
-    else df.join(broadcast(latestTs(spark, tsDir)), Seq("id"), "left")
+    else df.join(broadcast(latestTs(spark, tsDir, df.schema("id").dataType)),
+        Seq("id"), "left")
       .where(col("below").isNull || col("batch") >= col("below"))
       .drop("below")
   }
@@ -358,7 +404,7 @@ object LexIndex {
       batch.coalesce(1).write.mode("append").parquet(tsDir)
       // ledger hygiene: fold to latest-per-id past the file budget
       if (IndexFs.fileNames(tsDir).count(_.endsWith(".parquet")) > 16) {
-        val folded = latestTs(spark, tsDir)
+        val folded = latestTs(spark, tsDir, entries.schema("id").dataType)
           .select(col("id"), col("below"),
             lit(nextAt).as("at")).localCheckpoint()
         IncrementalDedup.clearStaging(s"$tsDir.next")
@@ -450,7 +496,7 @@ object LexIndex {
     val (postings, doclens) =
       derive(docs, idCol, textCol, nBuckets, analyzer, withPositions)
     val n = doclens.count()
-    if (n > 0) writeBatch(postings, doclens, root, nBuckets, bid)
+    if (n > 0) writeBatch(postings, doclens, root, bid)
     n
   }
 
@@ -480,7 +526,8 @@ object LexIndex {
     val needFloor =
       if (!IndexFs.exists(tsDir)) older
       else older.unionByName(
-        spark.read.parquet(tsDir).select(col("id"))
+        spark.read.schema(tombstoneSchema(batchIds.schema("id").dataType))
+          .parquet(tsDir).select(col("id"))
           .join(broadcast(batchIds), Seq("id"), "left_semi"))
     needFloor.distinct().select(col("id"), lit(bid).as("below"))
   }
@@ -514,7 +561,6 @@ object LexIndex {
       keepGenerations: Int = 2): Long =
     IndexLease.withLease(indexDir) {
       val root = IncrementalDedup.readRoot(indexDir)
-      val (nBuckets, _, _) = readMeta(spark, root)
       def scoped(table: String) = {
         val raw = spark.read.parquet(s"$root/$table")
         if (preserveBatchIds.isEmpty) raw
@@ -531,7 +577,7 @@ object LexIndex {
       val n = doclens.count()
       val next = s"$indexDir.compact"
       IncrementalDedup.clearStaging(next)
-      postings.repartition(nBuckets, col("bucket"))
+      postings.repartition(col("bucket"))
         .write.partitionBy("bucket").parquet(s"$next/postings/batch=-1")
       doclens.coalesce(math.max(1L, n / targetRows + 1).toInt)
         .write.parquet(s"$next/doclens/batch=-1")
@@ -561,7 +607,8 @@ object LexIndex {
         // id also has rows in a preserved delta would resurface those —
         // guarded loudly below (convention: operator upserts do not run
         // mid-stream between a delta landing and its compact)
-        val ts = latestTs(spark, s"$root/tombstones").localCheckpoint()
+        val ts = latestTs(spark, s"$root/tombstones",
+          doclens.schema("id").dataType).localCheckpoint()
         val keep = ts.where(col("below") === Long.MaxValue ||
           col("below").isin(preserveBatchIds.toSeq: _*))
         val dropped = ts.where(col("below") =!= Long.MaxValue &&
@@ -613,9 +660,11 @@ object LexIndex {
           // versions — each is join work every query pays) over the LIVE
           // count; one narrow doclens pass, exact under versioning (a
           // raw entry count would undercount once the ledger folds)
-          val nDocs = spark.read.parquet(s"$root/doclens").count()
-          val nHidden = spark.read.parquet(s"$root/doclens")
-            .join(broadcast(latestTs(spark, tsDir)), Seq("id"), "left")
+          val doclens = spark.read.parquet(s"$root/doclens")
+          val nDocs = doclens.count()
+          val nHidden = doclens.join(broadcast(
+              latestTs(spark, tsDir, doclens.schema("id").dataType)),
+              Seq("id"), "left")
             .where(col("batch") < col("below")).count()
           val nLive = nDocs - nHidden
           if (nLive <= 0 ||
@@ -628,39 +677,41 @@ object LexIndex {
       }
     }
 
-  /** (nBuckets, analyzer, positions) from `meta` — a legacy meta written
-    * before the analyzer/positions columns reads as (raw, positional),
-    * exactly what those indexes are.
+  /** (nBuckets, analyzer, positions) from `meta`, read with its known
+    * schema: a legacy meta written before the analyzer/positions columns
+    * reads them as null, which maps to (raw, positional) — exactly what
+    * those indexes are.
     */
   private def readMeta(spark: SparkSession,
       indexDir: String): (Int, String, Boolean) = {
-    val df = spark.read.parquet(s"$indexDir/meta")
-    val row = df.head()
-    val analyzer = if (df.columns.contains("analyzer"))
-      row.getAs[String]("analyzer") else "raw"
-    val positions = if (df.columns.contains("positions"))
-      row.getAs[Boolean]("positions") else true
-    (row.getAs[Int]("nbuckets"), analyzer, positions)
+    val row = spark.read.schema(MetaSchema).parquet(s"$indexDir/meta").head()
+    (row.getInt(0), if (row.isNullAt(1)) "raw" else row.getString(1),
+      row.isNullAt(2) || row.getBoolean(2))
   }
 
-  /** Exact LIVE corpus statistics (N, Σdl): summed from the append-only
-    * stats ledger — a handful of footer-scale rows — then corrected for
-    * pending tombstones via one narrow (id, dl) pass over doclens (paid
-    * only while tombstones pend; compact restores ledger-only reads).
+  /** Exact LIVE corpus statistics (N, Σdl). The append-only stats ledger
+    * is a handful of footer-scale rows (one per batch), so its rows are
+    * collected and summed on the driver — exact long/decimal sums, no
+    * aggregation job. Pending tombstones/versions are then subtracted via
+    * one narrow (id, dl) pass over doclens (paid only while tombstones
+    * pend; compact restores ledger-only reads).
     */
   private def liveStats(spark: SparkSession, indexDir: String,
       tsDir: String, hasTombstones: Boolean): (Long, java.math.BigDecimal) = {
-    val statRow = spark.read.parquet(s"$indexDir/stats")
-      .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl")).head()
-    var nLive: Long = if (statRow.isNullAt(0)) 0L else statRow.getLong(0)
-    var sumdlLive: java.math.BigDecimal = statRow.getDecimal(1)
+    val stats = spark.read.schema(StatsSchema).parquet(s"$indexDir/stats")
+      .select(col("n"), col("sumdl")).collect()
+    var nLive: Long = stats.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
+    var sumdlLive: java.math.BigDecimal = stats.filterNot(_.isNullAt(1))
+      .map(_.getDecimal(1)).reduceOption(_ add _).orNull
     if (hasTombstones && nLive > 0) {
       // subtract exactly the HIDDEN doclens rows (a deletion hides all of
       // an id's rows; an upsert version floor hides the old versions
       // while the replacement's own row stays counted by its batch's
       // stats ledger entry)
-      val corr = spark.read.parquet(s"$indexDir/doclens")
-        .join(broadcast(latestTs(spark, tsDir)), Seq("id"), "left")
+      val idType = idTypeOf(indexDir)
+      val corr = spark.read.schema(doclensSchema(idType))
+        .parquet(s"$indexDir/doclens")
+        .join(broadcast(latestTs(spark, tsDir, idType)), Seq("id"), "left")
         .where(col("batch") < col("below"))
         .agg(count(lit(1)).as("nd"),
           coalesce(sum(col("dl").cast("decimal(20,0)")),
@@ -679,6 +730,77 @@ object LexIndex {
         "documents before querying")
     (nLive, sumdlLive)
   }
+
+  /** The posting rows of `terms`, read from the `bucket=` dirs the terms
+    * hash to and no others: each `batch=` dir is listed once on the
+    * driver, and only the probed bucket dirs reach the reader (with
+    * `basePath`, so `batch` and `bucket` still read as columns). A
+    * whole-tree read would list all of a batch's bucket dirs, and past 32
+    * of them Spark lists with a parallel listing job on every query. No
+    * probed dir on disk → an empty frame of the same schema.
+    */
+  private def postingsOf(spark: SparkSession, root: String, nBuckets: Int,
+      withPositions: Boolean, terms: Seq[String]): DataFrame = {
+    val base = s"$root/postings"
+    val probed = terms.map(t => s"bucket=${bucketOfTerm(t, nBuckets)}").toSet
+    val dirs = IndexFs.subdirNames(base).filter(_.startsWith("batch="))
+      .flatMap(b => IndexFs.subdirNames(s"$base/$b").filter(probed)
+        .map(d => s"$base/$b/$d"))
+    val schema = postingsSchema(idTypeOf(root), withPositions)
+    val raw =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema).option("basePath", base).parquet(dirs: _*)
+    raw.where(col("term").isin(terms: _*))
+  }
+
+  /** What every BM25 read shares: the pinned live generation, its exact
+    * live (N, avgdl), the query terms through the index's analyzer (ONE
+    * projection for the whole batch), and the checkpointed LIVE union of
+    * their posting slices with every term's df counted from it in ONE
+    * grouped count — tombstone/version-exactness is free here (these are
+    * the rows the query reads anyway).
+    */
+  private[operators] final case class Slices(root: String, tsDir: String,
+      nLive: Long, avgdl: Double, terms: Seq[Seq[String]], union: DataFrame,
+      df: Map[String, Long]) {
+    def idf(term: String): Double =
+      ((nLive - df(term)).toDouble + 0.5) / (df(term).toDouble + 0.5)
+  }
+
+  private[operators] def slices(spark: SparkSession, indexDir: String,
+      queries: Seq[Seq[String]]): Slices = {
+    // pin the live generation for the whole call (reader-vs-swap safety)
+    val root = IncrementalDedup.readRoot(indexDir)
+    require(IndexFs.exists(s"$root/meta"),
+      s"$indexDir is not a lexical index (no meta table)")
+    val (nBuckets, analyzer, withPositions) = readMeta(spark, root)
+    val tsDir = s"$root/tombstones"
+    IncrementalDedup.recoverDir(tsDir)
+    val (nLive, sumdlLive) =
+      liveStats(spark, root, tsDir, IndexFs.exists(tsDir))
+    // the same operations bm25TopK's expression tree applies: decimal →
+    // double cast, long → double cast, one IEEE division
+    val avgdl = sumdlLive.doubleValue() / nLive.toDouble
+    // the index's persisted analyzer applies to the query terms — the
+    // layout decides, so query and index can never tokenize differently
+    val flat = analyzeTerms(spark, queries.flatten, analyzer)
+    val offsets = queries.scanLeft(0)(_ + _.size)
+    val termsA = queries.indices.map(i => flat.slice(offsets(i), offsets(i + 1)))
+    val union = applyVersionedTs(spark, tsDir,
+        postingsOf(spark, root, nBuckets, withPositions, flat.distinct)
+          .select(col("term"), col("id"), col("dl"), col("tf"), col("batch")))
+      .drop("batch")
+      .localCheckpoint()
+    val df = union.groupBy(col("term"))
+      .agg(count(lit(1)).as("df")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+      .withDefaultValue(0L)
+    Slices(root, tsDir, nLive, avgdl, termsA, union, df)
+  }
+
+  /** The id set of a retrieval filter: its FIRST column, distinct. */
+  private[operators] def allowedIds(allowed: DataFrame): DataFrame =
+    allowed.select(col(allowed.columns.head).as("id")).distinct()
 
   /** Exact PHRASE match counts served FROM the index — the positional
     * tier: an n-term phrase is an (n-1)-fold position-offset EQUI-join
@@ -709,12 +831,8 @@ object LexIndex {
     // case-sensitive — unlike TextSearch.phraseCount, which always
     // lowercases: the divergence is pinned by t139's oracle)
     val phraseA = analyzeTerms(spark, phrase, analyzer)
-    val termBuckets = spark.range(1)
-      .select(phraseA.map(t => bucketOf(lit(t), nBuckets)): _*).head()
     val slices = phraseA.zipWithIndex.map { case (t, k) =>
-      val raw = spark.read.parquet(s"$root/postings")
-        .where(col("bucket") === lit(termBuckets.getInt(k)) &&
-          col("term") === lit(t))
+      val raw = postingsOf(spark, root, nBuckets, withPositions, Seq(t))
         .select(col("id"), col("batch"), explode(col("positions")).as("__p"))
         .select(col("id"), col("batch"), (col("__p") - k).as("p0"))
       applyVersionedTs(spark, tsDir, raw).drop("batch")
@@ -756,15 +874,10 @@ object LexIndex {
     val phrasesA = phrases.map { case (qid, p) =>
       qid -> analyzeTerms(spark, p, analyzer)
     }
-    val allTerms = phrasesA.flatMap(_._2).distinct
-    val bucketRow = spark.range(1)
-      .select(allTerms.map(t => bucketOf(lit(t), nBuckets)): _*).head()
-    val buckets = allTerms.indices.map(bucketRow.getInt).distinct
     // ONE pruned read of the slice union, positions exploded once
     val union = applyVersionedTs(spark, tsDir,
-        spark.read.parquet(s"$root/postings")
-          .where(col("bucket").isin(buckets: _*) &&
-            col("term").isin(allTerms: _*))
+        postingsOf(spark, root, nBuckets, withPositions,
+            phrasesA.flatMap(_._2).distinct)
           .select(col("term"), col("id"), col("batch"),
             explode(col("positions")).as("__p")))
       .drop("batch")
@@ -782,15 +895,16 @@ object LexIndex {
     perPhrase.reduce(_ unionAll _)
   }
 
-  /** BM25 top-k served FROM the index: ONE bucket-pruned read of the
-    * union of the query terms' posting slices (df rows per term, never
-    * the corpus), ONE grouped count deriving every df from the live
-    * union, N/Σdl from the stats ledger (corrected exactly for pending
+  /** BM25 top-k served FROM the index: ONE read of the union of the
+    * query terms' posting slices (only their bucket dirs are listed and
+    * read — df rows per term, never the corpus), ONE grouped count
+    * deriving every df from the live union, N/Σdl summed from the stats
+    * ledger on the driver (corrected exactly for pending
     * tombstones/versions via one narrow doclens pass), and the scalars
     * folded into the [[TextSearch.bm25TopK]] IEEE expression tree —
     * bit-identical scores, posting-slice-scale reads, and a driver-job
-    * count that is CONSTANT in the term count (the batched path's
-    * recipe, shared since round 19).
+    * count that is CONSTANT in the term count (the batched path's reads,
+    * shared since round 19).
     *
     * Output matches `bm25TopK` exactly: `(id, dl, tf0..tfN, score)`, top
     * `k` by `(score desc, id)`, including its zero-score fill semantics —
@@ -807,63 +921,16 @@ object LexIndex {
       terms: Seq[String], k: Int, k1: Double = 1.5, b: Double = 0.75,
       allowed: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty && terms.forall(_.nonEmpty) && k >= 1)
-    // pin the live generation for the whole query (reader-vs-swap safety)
-    val root = IncrementalDedup.readRoot(indexDir)
-    require(IndexFs.exists(s"$root/meta"),
-      s"$indexDir is not a lexical index (no meta table)")
-    val (nBuckets, analyzer, _) = readMeta(spark, root)
-    // the index's persisted analyzer applies to the query terms — the
-    // layout decides, so query and index can never tokenize differently
-    val termsA = analyzeTerms(spark, terms, analyzer)
-    val tsDir = s"$root/tombstones"
-    IncrementalDedup.recoverDir(tsDir)
-    val hasTombstones = IndexFs.exists(tsDir)
-
-    val (nLive, sumdlLive) = liveStats(spark, root, tsDir, hasTombstones)
-    // the same operations bm25TopK's expression tree applies: decimal →
-    // double cast, long → double cast, one IEEE division
-    val avgdl = sumdlLive.doubleValue() / nLive.toDouble
-
-    // bucket of each term under the index's partitioning constant — one
-    // constant-folded local projection, no table scan
-    val termBuckets = spark.range(1)
-      .select(termsA.map(t => bucketOf(lit(t), nBuckets)): _*).head()
-    val buckets = termsA.indices.map(termBuckets.getInt).distinct
-
-    // ONE pruned read of the union of the terms' slices (checkpointed
-    // once) and ONE grouped count deriving every term's df — the r18
-    // shape paid ~2 driver actions per term (a checkpoint + a count per
-    // slice), which the batched path (bm25TopKFromIndexMany) was built
-    // to avoid; the single-query path now shares its recipe, so
-    // hybrid-search and the t137/t138 rows pay the fixed cost too. df is
-    // counted from the LIVE union — tombstone/version-exactness is free
-    // here (these are the rows the query reads anyway).
-    val union = applyVersionedTs(spark, tsDir,
-        spark.read.parquet(s"$root/postings")
-          .where(col("bucket").isin(buckets: _*) &&
-            col("term").isin(termsA: _*))
-          .select(col("term"), col("id"), col("dl"), col("tf"),
-            col("batch")))
-      .drop("batch")
-      .localCheckpoint()
-    val dfByTerm = union.groupBy(col("term"))
-      .agg(count(lit(1)).as("df")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
-    val slices = terms.indices.map { i =>
-      union.where(col("term") === lit(termsA(i)))
-        .select(col("id"), col("dl"), col("tf"))
-    }
-    val dfs = terms.indices.map(i => dfByTerm(termsA(i)))
-    val idfs = terms.indices.map { i =>
-      ((nLive - dfs(i)).toDouble + 0.5) / (dfs(i).toDouble + 0.5)
-    }
+    val sl = slices(spark, indexDir, Seq(terms))
+    val termsA = sl.terms.head
+    val idfs = termsA.map(sl.idf)
 
     // union of slices: full-outer on id, dl coalesced across slices
     // (every slice row of a doc carries the same dl), absent tfs → 0 —
     // slice-union scale, never corpus scale
-    val named = slices.zipWithIndex.map { case (s, i) =>
-      s.select(col("id"), col("dl").as(s"__dl$i"), col("tf").as(s"tf$i"))
+    val named = termsA.zipWithIndex.map { case (t, i) =>
+      sl.union.where(col("term") === lit(t))
+        .select(col("id"), col("dl").as(s"__dl$i"), col("tf").as(s"tf$i"))
     }
     val joined = named.reduce((a, c) => a.join(c, Seq("id"), "full_outer"))
     val dlCol = coalesce(terms.indices.map(i => col(s"__dl$i")): _*).as("dl")
@@ -871,12 +938,11 @@ object LexIndex {
       terms.indices.map(i =>
         coalesce(col(s"tf$i"), lit(0L)).cast("bigint").as(s"tf$i")): _*)
     val matchedFiltered = allowed match {
-      case Some(a) => matchedBase.join(
-        a.select(col(a.columns.head).as("id")).distinct(), Seq("id"), "left_semi")
+      case Some(a) => matchedBase.join(allowedIds(a), Seq("id"), "left_semi")
       case None => matchedBase
     }
 
-    val rel = col("dl").cast("double") / lit(avgdl)
+    val rel = col("dl").cast("double") / lit(sl.avgdl)
     def termScore(i: Int): Column = {
       val tf = col(s"tf$i").cast("double")
       lit(idfs(i)) *
@@ -894,11 +960,11 @@ object LexIndex {
       // zero-score fill: the full scan ranks EVERY document, so slots the
       // matches cannot fill go to the smallest-id non-matching live docs
       // at exactly 0.0 (a no-term doc's score is idf·0 summed — 0.0)
-      val liveDl = applyVersionedTs(spark, tsDir,
-        spark.read.parquet(s"$root/doclens")).drop("batch")
+      val liveDl = applyVersionedTs(spark, sl.tsDir,
+        spark.read.schema(doclensSchema(idTypeOf(sl.root)))
+          .parquet(s"${sl.root}/doclens")).drop("batch")
       val allowedDl = allowed match {
-        case Some(a) => liveDl.join(
-          a.select(col(a.columns.head).as("id")).distinct(), Seq("id"), "left_semi")
+        case Some(a) => liveDl.join(allowedIds(a), Seq("id"), "left_semi")
         case None => liveDl
       }
       val fills = allowedDl
@@ -915,19 +981,26 @@ object LexIndex {
     * their term slices — the production retrieval shape
     * ([[bm25TopKFromIndex]] is one-query-at-a-time: a handful of tiny
     * driver actions per call, which at 10k queries/s is 10k tiny jobs).
-    * Here the driver pays a FIXED number of jobs regardless of query
-    * count: one bucket-pruned read of the distinct terms' slices
-    * (checkpointed once), ONE grouped count deriving every term's df,
-    * one stats read (+ the tombstone correction pass when pending), and
-    * one final plan scoring every query.
+    * The driver pays a FIXED number of jobs regardless of the query count
+    * (spec-pinned at Q=2 vs Q=8): one read of the distinct terms' slices
+    * from their probed bucket dirs (checkpointed once), ONE grouped count
+    * deriving every term's df, the stats ledger summed on the driver (+
+    * the tombstone correction pass when pending), and ONE scoring pass
+    * for the whole batch.
     *
-    * Scores are the same IEEE expression tree as the single-query path —
-    * per query, the fixed-order sum over ITS terms' slices of the
-    * checkpointed union — so each query's (id, score) rows are
-    * bit-identical to its own [[bm25TopKFromIndex]] call. Ranking uses a
-    * window PARTITIONED BY query (per-query partition-local sort —
-    * parallel across queries, slice-union scale, never corpus scale
-    * beyond what the terms' own posting lists hold).
+    * The scoring pass broadcasts one `(query_id, term, slot, idf)` row
+    * per query term and joins it to the slice union on `term`, so every
+    * (query, document) pair sees the postings of its query's terms; a
+    * group by (query, document) then adds the term scores in SLOT order
+    * from 0.0 (`sort_array(collect_list(struct(slot, s)))` folded by
+    * `aggregate`). Each term score is the [[TextSearch.bm25TopK]]
+    * expression tree, and a term the document lacks would add exactly
+    * +0.0 to the per-term sum (k1 > 0, 0 ≤ b ≤ 1), so each query's
+    * (id, score) rows are bit-identical to its own
+    * [[bm25TopKFromIndex]] call (spec-pinned, duplicate terms included:
+    * each slot adds its own score). Ranking uses a window PARTITIONED BY
+    * query (per-query partition-local sort — parallel across queries,
+    * slice-union scale).
     *
     * Batch semantics (deliberately NOT the single-query output shape):
     * only MATCHING documents rank (no zero-score fill — a query with
@@ -948,79 +1021,36 @@ object LexIndex {
       queries.forall(q => q._2.nonEmpty && q._2.forall(_.nonEmpty)))
     require(queries.map(_._1).distinct.size == queries.size,
       "duplicate query ids")
-    // pin the live generation for the whole batch (reader-vs-swap safety)
-    val root = IncrementalDedup.readRoot(indexDir)
-    require(IndexFs.exists(s"$root/meta"),
-      s"$indexDir is not a lexical index (no meta table)")
-    val (nBuckets, analyzer, _) = readMeta(spark, root)
-    val tsDir = s"$root/tombstones"
-    IncrementalDedup.recoverDir(tsDir)
-    val hasTombstones = IndexFs.exists(tsDir)
-    val (nLive, sumdlLive) = liveStats(spark, root, tsDir, hasTombstones)
-    val avgdl = sumdlLive.doubleValue() / nLive.toDouble
-
-    // the index's persisted analyzer applies to every query's terms
-    val queriesA = queries.map { case (qid, ts) =>
-      qid -> analyzeTerms(spark, ts, analyzer)
-    }
-    val allTerms = queriesA.flatMap(_._2).distinct
-    val bucketRow = spark.range(1)
-      .select(allTerms.map(t => bucketOf(lit(t), nBuckets)): _*).head()
-    val buckets = allTerms.indices.map(bucketRow.getInt).distinct
-    // ONE pruned read of the union of slices; the term IN-list restricts
-    // the (bucket, term) superset the bucket IN-list admits
-    val union = applyVersionedTs(spark, tsDir,
-        spark.read.parquet(s"$root/postings")
-          .where(col("bucket").isin(buckets: _*) &&
-            col("term").isin(allTerms: _*))
-          .select(col("term"), col("id"), col("dl"), col("tf"),
-            col("batch")))
-      .drop("batch")
-      .localCheckpoint()
-    // every term's df from ONE grouped count over the union — BEFORE the
-    // allowed filter: scores stay corpus-calibrated like the single path
-    val dfByTerm = union.groupBy(col("term"))
-      .agg(count(lit(1)).as("df")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
-
+    require(k1 > 0 && b >= 0 && b <= 1,
+      s"k1 must be > 0 and b in [0, 1] (got k1=$k1, b=$b)")
+    val sl = slices(spark, indexDir, queries.map(_._2))
     // the retrieval filter restricts CANDIDATES only (one semi-join on
     // the union ≡ the single path's semi-join on each query's matched
-    // set, since both commute with the full-outer id join)
-    val unionServed = allowed match {
-      case Some(a) => union.join(
-        a.select(col(a.columns.head).as("id")).distinct(),
-        Seq("id"), "left_semi").localCheckpoint()
-      case None => union
+    // set, since both commute with the id join) — AFTER the df count:
+    // scores stay corpus-calibrated like the single path
+    val served = allowed match {
+      case Some(a) =>
+        sl.union.join(allowedIds(a), Seq("id"), "left_semi").localCheckpoint()
+      case None => sl.union
     }
-
-    // per query: the single-query join/score recipe over the CHECKPOINTED
-    // union (no re-read), normalized output, unioned into one plan
-    val perQuery = queriesA.map { case (qid, terms) =>
-      val named = terms.zipWithIndex.map { case (t, i) =>
-        unionServed.where(col("term") === lit(t))
-          .select(col("id"), col("dl").as(s"__dl$i"), col("tf").as(s"tf$i"))
-      }
-      val joined = named.reduce((a, c) => a.join(c, Seq("id"), "full_outer"))
-      val dlCol = coalesce(terms.indices.map(i => col(s"__dl$i")): _*).as("dl")
-      val base = joined.select(col("id") +: dlCol +:
-        terms.indices.map(i =>
-          coalesce(col(s"tf$i"), lit(0L)).cast("bigint").as(s"tf$i")): _*)
-      val rel = col("dl").cast("double") / lit(avgdl)
-      def termScore(i: Int): Column = {
-        val tf = col(s"tf$i").cast("double")
-        val df = dfByTerm(terms(i))
-        val idf = ((nLive - df).toDouble + 0.5) / (df.toDouble + 0.5)
-        lit(idf) *
-          ((tf * lit(k1 + 1)) / (tf + lit(k1) * (lit(1 - b) + lit(b) * rel)))
-      }
-      val score = terms.indices.map(termScore).reduceLeft(_ + _)
-      base.select(lit(qid).as("query_id"), col("id"), col("dl"),
-        score.as("score"))
-    }
+    import spark.implicits._
+    val probe = queries.map(_._1).zip(sl.terms).flatMap { case (qid, terms) =>
+      terms.zipWithIndex.map { case (t, slot) => (qid, t, slot, sl.idf(t)) }
+    }.toDF("query_id", "term", "slot", "idf")
+    val tf = col("tf").cast("double")
+    val rel = col("dl").cast("double") / lit(sl.avgdl)
+    val termScore = col("idf") *
+      ((tf * lit(k1 + 1)) / (tf + lit(k1) * (lit(1 - b) + lit(b) * rel)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("score").desc, col("id"))
-    perQuery.reduce(_ unionAll _)
+    served.join(broadcast(probe), Seq("term"))
+      .groupBy(col("query_id"), col("id"))
+      .agg(max(col("dl")).as("dl"),
+        sort_array(collect_list(struct(col("slot"), termScore.as("s"))))
+          .as("__s"))
+      .select(col("query_id"), col("id"), col("dl"),
+        aggregate(col("__s"), lit(0.0), (acc, x) => acc + x.getField("s"))
+          .as("score"))
       .withColumn("rank", row_number().over(w).cast("bigint"))
       .where(col("rank") <= k)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Product quantization (PQ) — the STORAGE tier of the ANN stack (Jégou,
   * Douze, Schmid, "Product Quantization for Nearest Neighbor Search",
@@ -101,13 +102,6 @@ object ProductQuantizer {
   private def unitize(vec: Column): Column =
     graft.expressions.GraftFunctions.unitVec(vec)
 
-  /** The pre-round-20 HOF formulation, kept for the bit-parity spec. */
-  private[operators] def unitizeHof(vec: Column): Column = {
-    val n = sqrt(Similarity.norm2(vec))
-    transform(vec, x => when(n > 0, x.cast("double") / n)
-      .otherwise(x.cast("double")))
-  }
-
   /** `unit(vec) − anchor(cell)`: the residual the `"residual"` encoding
     * quantizes. The anchors are the residual layout's persisted FLOAT
     * centroids VERBATIM — its coarse quantizer trains on the
@@ -128,14 +122,6 @@ object ProductQuantizer {
       anchors: Array[Array[Double]]): Column =
     graft.expressions.GraftFunctions.vecSubAnchor(
       unitize(vec), cell.cast("int"), anchors)
-
-  /** The pre-round-20 HOF formulation, kept for the bit-parity spec. */
-  private[operators] def residualColHof(vec: Column, cell: Column,
-      anchors: Array[Array[Double]]): Column = {
-    val anchorLit = array(anchors.map(a => array(a.map(lit): _*)): _*)
-    zip_with(unitizeHof(vec), element_at(anchorLit, cell.cast("int") + 1),
-      (x, a) => x - a)
-  }
 
   /** The m per-subspace k-means fits over a prepared (`__u`) frame —
     * shared by the raw and residual trainers. The fits are INDEPENDENT
@@ -289,43 +275,8 @@ object ProductQuantizer {
       graft.expressions.GraftFunctions.matVec(r, rot))
   }
 
-  /** End-to-end HOF twins of [[encode]]/[[encodeResidual]]/[[queryLut]]/
-    * [[queryLutResidual]] — the exact pre-round-20 expression chains, kept
-    * so the bit-parity spec can assert the native kernels reproduce them
-    * value-for-value over the real corpus (the adcHof/PqAdc pattern).
-    */
-  private[operators] def encodeHofTwin(vec: Column, model: PqModel): Column =
-    encodePreparedHof(unitizeHof(vec), model)
-  private[operators] def encodeResidualHofTwin(vec: Column, cell: Column,
-      model: PqModel, floatCentroids: Array[Array[Double]]): Column = {
-    val r = residualColHof(vec, cell, floatCentroids)
-    val prep = model.rotation.fold(r)(rot =>
-      graft.expressions.GraftFunctions.matVec(r, rot))
-    encodePreparedHof(prep, model)
-  }
-  private[operators] def queryLutHofTwin(vec: Column, model: PqModel): Column =
-    lutPreparedHof(unitizeHof(vec), model)
-  private[operators] def queryLutResidualHofTwin(vec: Column, cell: Column,
-      model: PqModel, floatCentroids: Array[Array[Double]]): Column = {
-    val r = residualColHof(vec, cell, floatCentroids)
-    val prep = model.rotation.fold(r)(rot =>
-      graft.expressions.GraftFunctions.matVec(r, rot))
-    lutPreparedHof(prep, model)
-  }
-
   private def encodePrepared(prep: Column, model: PqModel): Column =
     graft.expressions.GraftFunctions.pqCodes(prep, model.codebooks)
-
-  /** The pre-round-20 per-subspace formulation, kept for the bit-parity
-    * spec: m slices of `prep`, each re-evaluating the whole prepared tower
-    * under interpreted (CodegenFallback) evaluation.
-    */
-  private[operators] def encodePreparedHof(prep: Column, model: PqModel): Column =
-    array((0 until model.m).map { s =>
-      val d = graft.expressions.GraftFunctions.l2sqDistances(
-        slice(prep, s * model.subDim + 1, model.subDim), model.matrix(s))
-      (array_position(d, array_min(d)) - 1).cast("int")
-    }: _*)
 
   /** The query's per-subspace distance tables: `array<array<double>>`,
     * row s = squared L2 from the query's subspace-s slice to every entry of
@@ -355,15 +306,6 @@ object ProductQuantizer {
 
   private def lutPrepared(prep: Column, model: PqModel): Column =
     graft.expressions.GraftFunctions.pqLuts(prep, model.codebooks)
-
-  /** The pre-round-20 per-subspace formulation, kept for the bit-parity
-    * spec (same m× re-evaluation note as [[encodePreparedHof]]).
-    */
-  private[operators] def lutPreparedHof(prep: Column, model: PqModel): Column =
-    array((0 until model.m).map { s =>
-      graft.expressions.GraftFunctions.l2sqDistances(
-        slice(prep, s * model.subDim + 1, model.subDim), model.matrix(s))
-    }: _*)
 
   /** The ADC score — HOF twin of the native expression, kept for the
     * bit-parity spec (the native path is the one the scan uses).
@@ -585,6 +527,40 @@ object ProductQuantizer {
     model
   }
 
+  /** The schemas [[ivfPqBuildImpl]] writes, for readers that must not
+    * infer them (inference is a Spark job per read). The `cells` id and
+    * vector columns keep the caller's types, read from one footer on the
+    * driver; `cell` is the partition column.
+    */
+  private val PqModelSchema = StructType(Seq(
+    StructField("subspace", IntegerType),
+    StructField("codebook", ArrayType(ArrayType(DoubleType))),
+    StructField("encoding", StringType),
+    StructField("rotation", ArrayType(ArrayType(DoubleType)))))
+  private val CentroidsSchema = StructType(Seq(
+    StructField("cell", IntegerType),
+    StructField("centroid", ArrayType(FloatType))))
+  private def cellsSchema(root: String): StructType = {
+    val f = IndexFs.footerSchema(s"$root/cells")
+    StructType(Seq(f("neighbor_id"), StructField("codes", ArrayType(IntegerType)),
+      f("cv"), StructField("cell", IntegerType)))
+  }
+
+  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
+      root: String): DataFrame =
+    spark.read.schema(CentroidsSchema).parquet(s"$root/centroids")
+
+  /** The float-persisted centroid matrix, row i = cell i. The table holds
+    * nCells rows, so they are sorted on the driver, not by a Spark sort.
+    */
+  private def centroidMatrix(centroids: DataFrame): Array[Array[Double]] = {
+    val cen = centroids.collect().sortBy(_.getInt(0))
+    require(cen.nonEmpty && cen.zipWithIndex.forall {
+        case (r, i) => r.getInt(0) == i },
+      "centroid table must carry contiguous cells 0..n-1")
+    cen.map(_.getSeq[Float](1).toArray.map(_.toDouble))
+  }
+
   /** Grow a persisted IVF-PQ index under BOTH frozen quantizers — the
     * composed-layout analog of [[Similarity.ivfAppend]]: cells come from
     * the float-persisted centroid table (the authoritative coarse
@@ -632,12 +608,7 @@ object ProductQuantizer {
     // generation it reads, never creates one
     val root = IncrementalDedup.readRoot(indexDir)
     val model = loadModel(spark, root)
-    val cen = spark.read.parquet(s"$root/centroids")
-      .orderBy("cell").select("cell", "centroid").collect()
-    require(cen.nonEmpty && cen.zipWithIndex.forall {
-        case (r, i) => r.getInt(0) == i },
-      "centroid table must carry contiguous cells 0..n-1")
-    val matrix = cen.map(_.getSeq[Float](1).toArray.map(_.toDouble))
+    val matrix = centroidMatrix(readCentroids(spark, root))
     // loud guards BEFORE the write (Similarity.ivfDelete's re-add
     // contract + the upsert-version overlay)
     Similarity.requireNotTombstoned(spark, root, newVectors, idCol)
@@ -691,7 +662,7 @@ object ProductQuantizer {
     // folded); the generation commit drops the tombstone table and the
     // delta with the retired generation
     val cells = Similarity.liveRows(spark, root,
-        spark.read.parquet(s"$root/cells"))
+        spark.read.schema(cellsSchema(root)).parquet(s"$root/cells"))
       .select(col("neighbor_id"), col("cv")).localCheckpoint()
     val n = cells.count()
     val next = s"$indexDir.rebuild"
@@ -716,9 +687,11 @@ object ProductQuantizer {
   }
 
   /** Load the PQ model persisted by [[ivfPqBuild]] /
-    * [[ivfPqBuildResidual]]. Indexes written before the layout-version
-    * marker carry no `encoding` column and load as `"raw"` — exactly what
-    * they are — so they keep querying unchanged.
+    * [[ivfPqBuildResidual]], read with its known schema and ordered by
+    * subspace on the driver (the table holds m rows). Indexes written
+    * before the layout-version marker read `encoding` as null and load as
+    * `"raw"` — exactly what they are — and a null or absent `rotation`
+    * loads as none, so they keep querying unchanged.
     *
     * Resolves the LIVE generation itself ([[IncrementalDedup.readRoot]] —
     * idempotent when the caller already resolved: a generation dir has no
@@ -730,24 +703,16 @@ object ProductQuantizer {
     */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): PqModel = {
-    val df = spark.read.parquet(
-      s"${IncrementalDedup.readRoot(indexDir)}/pq_model")
-    val hasEncoding = df.columns.contains("encoding")
-    val rows = df.orderBy("subspace").collect()
-    val codebooks = rows.map(_.getSeq[scala.collection.Seq[Double]](
-        rows.head.fieldIndex("codebook"))
+    val rows = spark.read.schema(PqModelSchema)
+      .parquet(s"${IncrementalDedup.readRoot(indexDir)}/pq_model")
+      .collect().sortBy(_.getInt(0))
+    val codebooks = rows.map(_.getSeq[scala.collection.Seq[Double]](1)
       .map(_.toVector).toVector).toVector
-    val encoding =
-      if (hasEncoding) rows.head.getString(rows.head.fieldIndex("encoding"))
-      else "raw"
+    val encoding = if (rows.head.isNullAt(2)) "raw" else rows.head.getString(2)
     val rotation =
-      if (!df.columns.contains("rotation")) None
-      else {
-        val idx = rows.head.fieldIndex("rotation")
-        if (rows.head.isNullAt(idx)) None
-        else Some(rows.head.getSeq[scala.collection.Seq[Double]](idx)
-          .map(_.toVector).toVector)
-      }
+      if (rows.head.isNullAt(3)) None
+      else Some(rows.head.getSeq[scala.collection.Seq[Double]](3)
+        .map(_.toVector).toVector)
     PqModel(codebooks.length, codebooks.head.head.length,
       codebooks.head.length, codebooks, encoding, rotation)
   }
@@ -806,8 +771,8 @@ object ProductQuantizer {
     val root = IncrementalDedup.readRoot(indexDir)
     // selectivity over LIVE rows only (Similarity's adaptive sibling rule)
     val cells = Similarity.liveRows(spark, root,
-      spark.read.parquet(s"$root/cells"))
-    val nCells = spark.read.parquet(s"$root/centroids").count().toInt
+      spark.read.schema(cellsSchema(root)).parquet(s"$root/cells"))
+    val nCells = readCentroids(spark, root).count().toInt
     val total = cells.count()
     val kept = cells.join(
       allowed.select(col(allowedIdCol).as("neighbor_id")).distinct(),
@@ -827,7 +792,8 @@ object ProductQuantizer {
     // pin the live generation for the whole query (reader-vs-swap safety)
     val root = IncrementalDedup.readRoot(indexDir)
     val model = loadModel(spark, root)
-    val centroids = spark.read.parquet(s"$root/centroids")
+    val centroids = readCentroids(spark, root)
+    val cells = cellsSchema(root)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val probeW = Window.partitionBy($"query_id").orderBy($"cdist", $"cell")
     val probes = q.crossJoin(broadcast(centroids))
@@ -847,19 +813,14 @@ object ProductQuantizer {
     // partition-prune, then the tombstone anti-join (deleted ids must not
     // crowd the rerank pool), then the caller's restriction
     val coded = restrict(Similarity.liveRows(spark, root,
-      spark.read.parquet(s"$root/cells")
+      spark.read.schema(cells).parquet(s"$root/cells")
         .filter($"cell".isInCollection(probeCells))
         .select($"cell", $"neighbor_id", $"codes"),
       _.filter($"cell".isInCollection(probeCells))))
     val lut =
-      if (model.isResidual) {
-        val cen = centroids.orderBy("cell").select("cell", "centroid").collect()
-        require(cen.nonEmpty && cen.zipWithIndex.forall {
-            case (r, i) => r.getInt(0) == i },
-          "centroid table must carry contiguous cells 0..n-1")
-        val matrix = cen.map(_.getSeq[Float](1).toArray.map(_.toDouble))
-        queryLutResidual($"qv", $"cell", model, matrix)
-      } else queryLut($"qv", model)
+      if (model.isResidual)
+        queryLutResidual($"qv", $"cell", model, centroidMatrix(centroids))
+      else queryLut($"qv", model)
     val withLut = probes.select($"query_id", $"cell", lut.as("__lut"))
     val poolW = Window.partitionBy($"query_id").orderBy($"adist", $"neighbor_id")
     val pool = coded.join(broadcast(withLut), Seq("cell"))
@@ -874,7 +835,7 @@ object ProductQuantizer {
     // the refine read resolves upsert versions too: an upserted id's
     // pool row must refine against its NEW vector, never the stale base
     val vecs = Similarity.liveRows(spark, root,
-        spark.read.parquet(s"$root/cells")
+        spark.read.schema(cells).parquet(s"$root/cells")
           .filter($"cell".isInCollection(probeCells))
           .select($"cell", $"neighbor_id", $"cv"),
         _.filter($"cell".isInCollection(probeCells)))

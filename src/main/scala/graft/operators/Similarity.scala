@@ -878,33 +878,17 @@ object Similarity {
       .select($"query_id", $"rank", $"neighbor_id", $"sim")
   }
 
-  /** Deterministic pseudo-random hyperplane component for (bit i, dim j):
-    * uniform in [-0.5, 0.5) derived from xxhash64 — reproducible everywhere,
-    * no driver-side RNG state (Date/random-free by construction).
-    */
-  private def hyperplane(i: Column, j: Column): Column =
-    (pmod(xxhash64(i, j), lit(1000000L)).cast("double") / 1000000.0) - 0.5
-
   /** Sign-random-projection signature: `bits` sign bits (hyperplane rows
-    * [offset, offset + bits)) packed into a long. Delegates to the native
-    * one-pass expression (graft.expressions.SrpSignature, codegen'd);
-    * [[srpSignatureHof]] is the built-in-functions construction kept for the
-    * bit-parity spec — the HOF tree is CodegenFallback and dominates
-    * wall-clock past ~10^4 vectors.
+    * [offset, offset + bits)) packed into a long. Hyperplane component
+    * (bit i, dim j) is uniform in [-0.5, 0.5), derived from xxhash64 —
+    * reproducible everywhere, no driver-side RNG state. Delegates to the
+    * native one-pass expression (graft.expressions.SrpSignature,
+    * codegen'd); the built-in-functions construction it replaced is the
+    * bit-parity spec's twin — the HOF tree is CodegenFallback and
+    * dominates wall-clock past ~10^4 vectors.
     */
   def srpSignature(vec: Column, bits: Int, offset: Int = 0): Column =
     graft.expressions.GraftFunctions.srpSig(vec, bits, offset)
-
-  def srpSignatureHof(vec: Column, bits: Int, offset: Int = 0): Column =
-    aggregate(
-      transform(sequence(lit(offset), lit(offset + bits - 1)), i => {
-        val d = aggregate(
-          zip_with(vec, sequence(lit(0), size(vec) - 1),
-            (x, j) => x.cast("double") * hyperplane(i, j)),
-          lit(0.0), (acc, v) => acc + v)
-        when(d > 0, call_function("shiftleft", lit(1L), i - offset)).otherwise(0L)
-      }),
-      lit(0.0).cast("long"), (acc, v) => acc.bitwiseOR(v))
 
   /** Banding parameters for [[embeddingNearDupsLsh]] sized to the corpus.
     *

@@ -80,15 +80,12 @@ object TextAnalysis {
       "\\s+", " "))
 
   /** Character n-grams as an array column (requires length(text) >= n).
-    * Native one-pass expression; `charNgramsHof` is the built-in-functions
-    * equivalent kept for the parity spec (ArrayTransform is interpreted —
+    * Native one-pass expression; the built-in-functions equivalent it
+    * replaced is the parity spec's twin (ArrayTransform is interpreted —
     * CodegenFallback — and was the cost center of the n-gram profile query).
     */
   def charNgrams(text: Column, n: Int): Column =
     graft.expressions.GraftFunctions.charNgrams(text, n)
-
-  def charNgramsHof(text: Column, n: Int): Column =
-    transform(sequence(lit(1), length(text) - (n - 1)), i => text.substr(i, lit(n)))
 
   /** TF-IDF top term per document, with a rational idf (N/df instead of
     * log(N/df)) so the score is a chain of exact IEEE divisions — Java's

@@ -311,9 +311,10 @@ object ExtensionQueries10 {
         // union of their term slices — fixed driver-job count regardless
         // of query count (the production many-queries shape; the
         // single-query path pays its handful of tiny jobs per call).
-        // Matched-docs-only by contract; scores are the same IEEE tree as
-        // the single path, so the oracle recomputes each query's scores
-        // from raw text with the t50 formula and ranks per query.
+        // Matched-docs-only by contract; each term score is the single
+        // path's IEEE tree, added in term order, so the oracle recomputes
+        // each query's scores from raw text with the t50 formula and
+        // ranks per query.
         LexIndex.bm25TopKFromIndexMany(s, lexDir(s, d), Seq(
             "q_a" -> Seq("spark", "merge"),
             "q_b" -> Seq("window"),
@@ -362,11 +363,14 @@ object ExtensionQueries10 {
              |FROM u WHERE rank <= 12 ORDER BY query_id, rank""".stripMargin),
       doc = "Batched BM25 retrieval (LexIndex.bm25TopKFromIndexMany): " +
         "three queries served from ONE pass over the union of their term " +
-        "slices — one pruned slice read, one grouped df count, one stats " +
-        "read, one scoring plan, regardless of query count. Matched docs " +
-        "only; per-query ranks via a query-partitioned window. The " +
-        "oracle recomputes every query's scores from raw text (the t50 " +
-        "formula) — ranks AND doubles hash cross-engine."
+        "slices — one read of the probed bucket dirs, one grouped df " +
+        "count, the stats ledger summed on the driver, and one scoring " +
+        "pass (a broadcast (query, term, slot, idf) join, term scores " +
+        "added in slot order per (query, doc)), so the job count does not " +
+        "grow with the query count. Matched docs only; per-query ranks via " +
+        "a query-partitioned window. The oracle recomputes every query's " +
+        "scores from raw text (the t50 formula) — ranks AND doubles hash " +
+        "cross-engine."
     )
   )
 }

@@ -66,7 +66,7 @@ class GraftExpressionsSpec extends SparkSpec {
       val mismatches = emb
         .select(
           Similarity.srpSignature($"embedding", bits, offset).as("native"),
-          Similarity.srpSignatureHof($"embedding", bits, offset).as("hof"))
+          graft.operators.HofTwins.srpSignature($"embedding", bits, offset).as("hof"))
         .filter($"native" =!= $"hof")
         .count()
       assert(mismatches == 0, s"bits=$bits offset=$offset")
@@ -89,7 +89,7 @@ class GraftExpressionsSpec extends SparkSpec {
     val mismatches = docs
       .select(
         graft.operators.TextAnalysis.charNgrams($"text", 3).as("native"),
-        graft.operators.TextAnalysis.charNgramsHof($"text", 3).as("hof"))
+        graft.operators.HofTwins.charNgrams($"text", 3).as("hof"))
       .filter($"native" =!= $"hof")
       .count()
     assert(mismatches == 0)

@@ -94,6 +94,62 @@ class BatchedServingSpec extends SparkSpec {
       s"ivfPqQuery jobs grew with the batch: Q=2 -> $j2 jobs, Q=8 -> $j8")
   }
 
+  test("bm25TopKFromIndexMany: driver-job count is CONSTANT in the query-batch size") {
+    lexDir
+    val terms = Seq("spark", "merge", "window", "data", "table", "query",
+      "index", "stream")
+    def batch(q: Int) = (0 until q).map(i =>
+      s"q$i" -> Seq(terms(i % terms.size), terms((i + 3) % terms.size)))
+    val j2 = jobsIn("lex_q2") {
+      LexIndex.bm25TopKFromIndexMany(spark, lexDir, batch(2), k = 5).collect()
+    }
+    val j8 = jobsIn("lex_q8") {
+      LexIndex.bm25TopKFromIndexMany(spark, lexDir, batch(8), k = 5).collect()
+    }
+    assert(j2 > 0, "job group saw no jobs — the counter is broken")
+    assert(j8 == j2,
+      s"bm25TopKFromIndexMany jobs grew with the batch: Q=2 -> $j2 jobs, Q=8 -> $j8")
+  }
+
+  test("the query entry points start no schema-inference or file-listing job, tombstones pending") {
+    val lex = tmp("listen_lex")
+    LexIndex.build(docs.where($"doc_id" < 300), "doc_id", "text", lex,
+      nBuckets = 64)
+    LexIndex.delete(spark, lex,
+      docs.where($"doc_id" % 9 === 0).select($"doc_id"), "doc_id")
+    val pq = tmp("listen_pq")
+    ProductQuantizer.ivfPqBuildResidual(emb, "vec_id", "embedding", 4, 8, 16, pq)
+    Similarity.ivfDelete(spark, pq,
+      emb.where($"vec_id" % 9 === 0).select($"vec_id"), "vec_id")
+    val queries = queriesOf(1L, 2L).localCheckpoint()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.stageInfos.map(_.name).mkString("; ") + " / " +
+          Option(e.properties).map(_.getProperty("spark.job.description")).orNull,
+          e.stageInfos.map(_.numTasks).sum))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      LexIndex.bm25TopKFromIndexMany(spark, lex,
+        Seq("a" -> Seq("spark", "merge"), "b" -> Seq("window")), k = 5).collect()
+      ProductQuantizer.ivfPqQuery(spark, pq, queries, "vec_id", "embedding",
+        k = 5, nProbe = 2, rerank = 20).collect()
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq
+    assert(seen.nonEmpty, "the listener saw no jobs")
+    // a job started from inside DataFrameReader.parquet is schema
+    // inference or a parallel file listing
+    val readerJobs = seen.filter(_._1.contains("parquet at "))
+    assert(readerJobs.isEmpty, s"reader jobs: $readerJobs")
+    val listing = seen.filter { case (d, n) => d.contains("Listing") && n >= 32 }
+    assert(listing.isEmpty, s"listing jobs: $listing")
+  }
+
   test("each query's batched rows are value-identical to its single-query call (ivf + ivfpq)") {
     val ids = Seq(0L, 3L, 11L)
     val batchedIvf = Similarity.ivfQuery(spark, ivfDir, queriesOf(ids: _*),

@@ -52,7 +52,7 @@ class ClusteringSpec extends SparkSpec {
     for (df <- Seq(dbl, flt)) {
       val rows = df.select(
         graft.expressions.GraftFunctions.l2sqDistances($"vec", cents).as("nat"),
-        Clustering.distancesHof($"vec", cents).as("hof")).collect()
+        HofTwins.distances($"vec", cents).as("hof")).collect()
       rows.foreach { r =>
         assert(r.getSeq[Double](0) == r.getSeq[Double](1), "native != HOF")
       }

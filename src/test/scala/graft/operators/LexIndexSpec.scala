@@ -690,4 +690,107 @@ class LexIndexSpec extends SparkSpec {
     assert(deferred.count() == nDel, "tombstoned ids not deferred after heal")
     assert(ok.count() == nAll - nDel)
   }
+
+  test("bm25TopKFromIndexMany's one scoring pass ≡ the per-query recipe bit for bit: duplicate terms, an unindexed term, allowed, pending tombstones, an upserted id") {
+    val dir = tmp("lex_onepass")
+    val base = docs.where($"doc_id" < 400).select($"doc_id", $"text")
+    LexIndex.build(base, "doc_id", "text", dir, nBuckets = 8)
+    // a version floor for doc 7 (upsert) and pending deletions beside it
+    LexIndex.upsert(spark, dir, base.where($"doc_id" === 7)
+      .select($"doc_id", concat($"text", lit(" spark spark zz_up")).as("text")),
+      "doc_id", "text")
+    LexIndex.delete(spark, dir,
+      base.where($"doc_id" % 5 === 0).select($"doc_id"), "doc_id")
+    assert(IndexFs.exists(s"${IncrementalDedup.readRoot(dir)}/tombstones"))
+    val qs = Seq(
+      "dup" -> Seq("spark", "merge", "spark"),
+      "none" -> Seq("nosuchterm_zzz"),
+      "mixed" -> Seq("window", "nosuchterm_zzz", "merge"),
+      "up" -> Seq("zz_up", "spark"))
+    val allowed = base.where($"doc_id" % 3 =!= 0).select($"doc_id")
+    def rows(df: DataFrame) = df.orderBy($"query_id", $"rank").collect().toSeq
+    for (a <- Seq(None, Some(allowed))) {
+      val got = LexIndex.bm25TopKFromIndexMany(spark, dir, qs, k = 25, allowed = a)
+      val want = Bm25PerQueryRecipe(spark, dir, qs, k = 25, allowed = a)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      val (g, w) = (rows(got), rows(want))
+      assert(g == w, s"allowed=${a.isDefined}\none-pass: ${g.take(5)}\nrecipe:   ${w.take(5)}")
+      assert(!g.exists(_.getAs[String]("query_id") == "none"))
+      assert(g.exists(r => r.getAs[String]("query_id") == "up" &&
+        r.getAs[Long]("id") == 7L), "the upserted version is not served")
+      assert(!g.exists(r => r.getAs[Long]("id") % 5 == 0), "a deleted id surfaced")
+    }
+  }
+
+  test("legacy layouts through the known-schema reads: a meta without analyzer/positions and an id-only tombstone table keep their defaults") {
+    val dir = tmp("lex_legacy_ts")
+    val corpus = docs.where($"doc_id" < 300)
+    LexIndex.build(corpus, "doc_id", "text", dir, nBuckets = 4)
+    Seq(4).toDF("nbuckets").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/meta")
+    // a delete written before the ledger was versioned: ids only
+    corpus.where($"doc_id" % 6 === 0).select($"doc_id".as("id")).coalesce(1)
+      .write.parquet(s"$dir/tombstones")
+    def check(live: DataFrame, hint: String): Unit = {
+      assertSame(LexIndex.bm25TopKFromIndex(spark, dir, terms, k = 10),
+        TextSearch.bm25TopK(live, $"doc_id", $"text", terms, k = 10), hint)
+      val many = LexIndex.bm25TopKFromIndexMany(spark, dir,
+          Seq("q" -> terms), k = 10)
+        .select($"id", $"dl", $"score").orderBy($"score".desc, $"id")
+        .collect().toSeq
+      val scan = TextSearch.bm25TopK(live, $"doc_id", $"text", terms, k = 10)
+        .where($"score" > 0.0).select($"id", $"dl", $"score")
+        .orderBy($"score".desc, $"id").collect().toSeq
+      assert(many == scan, s"$hint (batched)")
+    }
+    check(corpus.where($"doc_id" % 6 =!= 0),
+      "id-only tombstones did not read as full deletions")
+    // the first versioned write migrates the ledger; answers stay exact
+    LexIndex.delete(spark, dir, corpus.where($"doc_id" === 1)
+      .select($"doc_id"), "doc_id")
+    check(corpus.where($"doc_id" % 6 =!= 0 && $"doc_id" =!= 1),
+      "the migrated ledger diverged")
+  }
+
+  test("a query's driver-side bucket equals bucketOf as the build computed it, ASCII and non-ASCII") {
+    val words = Seq("spark", "Merge", "a", "naïve", "smörgåsbord", "Ångström",
+      "日本語", "emoji😀", "x" * 300)
+    for (n <- Seq(1, 8, 64, 1000)) {
+      // evaluated per row (no constant folding): the executor path
+      val want = spark.range(words.size)
+        .select(LexIndex.bucketOf(element_at(typedLit(words),
+          ($"id" + 1).cast("int")), n))
+        .as[Int].collect().toSeq
+      assert(words.map(LexIndex.bucketOfTerm(_, n)) == want, s"nBuckets=$n")
+    }
+    // and every posting a build wrote sits in its term's driver-side bucket
+    val dir = tmp("lex_buckets")
+    LexIndex.build(Seq((1L, words.mkString(" ")), (2L, "spark Ångström"))
+      .toDF("doc_id", "text"), "doc_id", "text", dir, nBuckets = 8)
+    val stored = spark.read.parquet(s"$dir/postings")
+      .select($"term", $"bucket").distinct().as[(String, Int)].collect()
+    assert(stored.map(_._1).toSet == words.toSet)
+    stored.foreach { case (t, b) =>
+      assert(LexIndex.bucketOfTerm(t, 8) == b, s"'$t' stored in bucket $b")
+    }
+  }
+
+  test("each batch writes at most one file per bucket dir: build, a small append, and the compact rewrite") {
+    val dir = tmp("lex_files")
+    LexIndex.build(docs.where($"doc_id" < 300), "doc_id", "text", dir,
+      nBuckets = 8)
+    LexIndex.append(spark, dir,
+      docs.where($"doc_id" >= 300 && $"doc_id" < 306), "doc_id", "text")
+    def check(root: String): Unit = {
+      val batches = IndexFs.subdirNames(s"$root/postings")
+      val bucketDirs = batches.flatMap(b =>
+        IndexFs.subdirNames(s"$root/postings/$b").map(d => s"$root/postings/$b/$d"))
+      assert(bucketDirs.nonEmpty)
+      bucketDirs.foreach(d =>
+        assert(IndexFs.fileNames(d).count(_.endsWith(".parquet")) <= 1, d))
+    }
+    check(IncrementalDedup.readRoot(dir))
+    LexIndex.compact(spark, dir)
+    check(IncrementalDedup.readRoot(dir))
+  }
 }

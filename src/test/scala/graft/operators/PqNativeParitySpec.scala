@@ -25,18 +25,18 @@ class PqNativeParitySpec extends SparkSpec {
     val df = emb.select($"vec_id", $"embedding").unionByName(zero)
     val diff = df.where(
       graft.expressions.GraftFunctions.unitVec($"embedding")
-        =!= ProductQuantizer.unitizeHof($"embedding")).count()
+        =!= HofTwins.unitize($"embedding")).count()
     assert(diff == 0)
   }
 
   test("native raw-layout codes and LUTs are bit-identical to the HOF chains") {
     val codeDiff = emb.where(
       ProductQuantizer.encode($"embedding", rawModel)
-        =!= ProductQuantizer.encodeHofTwin($"embedding", rawModel)).count()
+        =!= HofTwins.encode($"embedding", rawModel)).count()
     assert(codeDiff == 0)
     val lutDiff = emb.where(
       ProductQuantizer.queryLut($"embedding", rawModel)
-        =!= ProductQuantizer.queryLutHofTwin($"embedding", rawModel)).count()
+        =!= HofTwins.queryLut($"embedding", rawModel)).count()
     assert(lutDiff == 0)
   }
 
@@ -60,12 +60,12 @@ class PqNativeParitySpec extends SparkSpec {
         anchors, m = 16, nCodes = 16, rotate = rotate)
       val codeDiff = assigned.where(
         ProductQuantizer.encodeResidual($"embedding", $"cell", model, anchors)
-          =!= ProductQuantizer.encodeResidualHofTwin(
+          =!= HofTwins.encodeResidual(
             $"embedding", $"cell", model, anchors)).count()
       assert(codeDiff == 0, s"rotate=$rotate residual codes diverged")
       val lutDiff = assigned.where(
         ProductQuantizer.queryLutResidual($"embedding", $"cell", model, anchors)
-          =!= ProductQuantizer.queryLutResidualHofTwin(
+          =!= HofTwins.queryLutResidual(
             $"embedding", $"cell", model, anchors)).count()
       assert(lutDiff == 0, s"rotate=$rotate residual LUTs diverged")
     }

@@ -247,6 +247,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"))
   }
 
+  test("t20/t23/t54/t85 exchange counts stay at their round-21 shapes") {
+    // the plans round 21 paid for when Fanout.spread left these sites:
+    // (shuffle, broadcast) exchanges in the planned physical plan, pinned
+    // at today's values so a refactor that adds a shuffle or loses a
+    // broadcast fails here
+    def exchanges(name: String): (Int, Int) = {
+      val p = planOf(name)
+      val shuffle = ("\\bExchange (hashpartitioning|rangepartitioning|" +
+        "SinglePartition|RoundRobinPartitioning)").r
+      (shuffle.findAllIn(p).size, "BroadcastExchange".r.findAllIn(p).size)
+    }
+    val want = Seq("t20_tfidf" -> (8, 3), "t23_prefix_jaccard" -> (6, 5),
+      "t54_dupspans" -> (4, 2), "t85_span_removal" -> (5, 3))
+    for ((name, counts) <- want)
+      assert(exchanges(name) == counts, s"$name (shuffle, broadcast) exchanges")
+  }
+
   test("t56/t61: the no-window sampling and bucketing contracts hold") {
     // temperatureBalance and bucketBy both exist to AVOID the global-sort /
     // per-group window formulations — a Window operator appearing in either
