@@ -4,16 +4,19 @@ import graft.core.RefConfig
 import graft.sinks.KeyedFileSink
 import graft.sources.SchoolCsv
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Program 2 equivalent (SURVEY.md §3.2): Markdown dir → LLM → cleaned
   * Markdown + raw/FAILED JSON, with idempotent incremental skip.
   *
-  * Spark plan: `document-dir scan → LEFT ANTI join(existing outputs) → limit →
-  * mapPartitions(enrich) → split ok/fail → keyed-file sinks`. The anti-join
-  * is the distributed form of the reference's skip-if-exists check
-  * (`_filter_already_processed_files`, `src/program2_ai_processor.py:692-724`).
+  * Spark plan, one action: `document-dir scan → LEFT ANTI join(existing
+  * outputs) → [orderBy(key) → limit, only when a limit is set] →
+  * mapPartitions(enrich) → one keyed-file pass writing the description, the
+  * raw JSON and the FAILED JSON`. The anti-join is the distributed form of
+  * the reference's skip-if-exists check (`_filter_already_processed_files`,
+  * `src/program2_ai_processor.py:692-724`). Without a limit the processing
+  * order only shows in the logs (O3), so there is no sort.
   */
 object EnrichJob {
 
@@ -21,11 +24,11 @@ object EnrichJob {
   final case class Stats(total: Long, skipped: Long, attempted: Long,
       successful: Long, failed: Long)
 
-  private def prettyJson(s: String): String = {
-    val m = new ObjectMapper()
-    try m.writerWithDefaultPrettyPrinter().writeValueAsString(m.readTree(s))
+  private val json = new ObjectMapper()
+
+  private def prettyJson(s: String): String =
+    try json.writerWithDefaultPrettyPrinter().writeValueAsString(json.readTree(s))
     catch { case _: Exception => s }
-  }
 
   /** The E2/E3 exact-global envelope: ONE driver-hosted lease server owning
     * the token-bucket clock ([[EnrichConfig.exactGlobalRpm]]) and/or the
@@ -87,48 +90,63 @@ object EnrichJob {
       .readDocumentDir(spark, outputMarkdownDir, RefConfig.AiProcessedSuffix)
       .select(col("key"))
 
-    val total = inputs.count()
     // P9/J2: incremental skip as a left anti-join on the key
     val fresh = inputs.join(existing, Seq("key"), "left_anti")
-    val ordered = fresh.orderBy(col("key")) // O3 deterministic order
-    val limited = limit.fold(ordered)(n => ordered.limit(n)) // O4
-    val attempted = limited.count()
+    // O4: the first n new keys in key order
+    val todo = limit.fold(fresh)(n => fresh.orderBy(col("key")).limit(n))
 
     // E2/E3 exact modes: one driver-hosted server owns the token-bucket
     // clock and/or the concurrency slots for every partition; it lives for
-    // the duration of the job's actions below
+    // the duration of the enrich action
     val envelope = exactEnvelope(spark, config, sleeper)
-    try {
-
-    val enriched = EnrichOperator
-      .enrich(
-        limited.select(col("key"), col("content")).as[EnrichOperator.Doc],
-        transportFactory, promptTemplate, config, sleeper,
-        envelope.limiterFactory, envelope.slotFactory)
-      .cache()
-
-    val okDf = enriched.filter(col("ok")).toDF()
-    val failDf = enriched.filter(!col("ok") && col("raw").isNotNull).toDF()
-
-    val prettify = udf(prettyJson _)
-    val successful = KeyedFileSink.write(
-      okDf, "key", "description", outputMarkdownDir, RefConfig.AiProcessedSuffix)
-    KeyedFileSink.write(
-      okDf.withColumn("rawPretty", prettify(col("raw"))),
-      "key", "rawPretty", outputJsonDir, RefConfig.AiRawResponseSuffix)
-    KeyedFileSink.write(
-      failDf.withColumn("rawPretty", prettify(col("raw"))),
-      "key", "rawPretty", outputJsonDir, RefConfig.AiFailedResponseSuffix)
-
-    val stats = Stats(
+    val written =
+      try writeEnriched(todo.select(col("key"), col("content")).as[EnrichOperator.Doc],
+        outputMarkdownDir, outputJsonDir, transportFactory, promptTemplate, config,
+        sleeper, envelope.limiterFactory, envelope.slotFactory)
+      finally envelope.stop()
+    // counted after the enrich action, so it never delays the first call
+    val total = inputs.count()
+    val attempted = written.rows
+    val successful = written.files.head
+    Stats(
       total = total,
       skipped = total - attempted,
       attempted = attempted,
       successful = successful,
       failed = attempted - successful)
-    enriched.unpersist()
-    stats
+  }
 
-    } finally envelope.stop()
+  /** Enriches `docs` and writes, in one pass over them, each document's
+    * `{key}_ai_description.md` (ok), `{key}_gpt4o_response.json` (ok, raw
+    * JSON pretty-printed) or `{key}_gpt4o_FAILED_response.json` (failed with
+    * a raw body), as the reference saves each answer when it arrives
+    * (`src/program2_ai_processor.py:587-613`). Every document reaches the
+    * transport once. `rows` of the result is the documents attempted;
+    * `files.head` is the descriptions written.
+    */
+  def writeEnriched(
+      docs: Dataset[EnrichOperator.Doc],
+      outputMarkdownDir: String,
+      outputJsonDir: String,
+      transportFactory: () => LlmTransport,
+      promptTemplate: String,
+      config: EnrichConfig,
+      sleeper: Long => Unit = Thread.sleep,
+      limiterFactory: Option[() => RateLimiter] = None,
+      slotFactory: Option[() => RemoteConcurrencyLimiter] = None): KeyedFileSink.Written = {
+    val enriched = EnrichOperator.enrich(docs, transportFactory, promptTemplate,
+      config, sleeper, limiterFactory, slotFactory)
+    val prettify = udf(prettyJson _)
+    val ok = col("ok")
+    val raw = col("raw")
+    KeyedFileSink.writeAll(
+      enriched.select(col("key"),
+        when(ok, col("description")).as("md"),
+        when(ok, prettify(raw)).as("okJson"),
+        when(!ok && raw.isNotNull, prettify(raw)).as("failJson")),
+      "key", Seq(
+        KeyedFileSink.Output("md", outputMarkdownDir, RefConfig.AiProcessedSuffix),
+        KeyedFileSink.Output("okJson", outputJsonDir, RefConfig.AiRawResponseSuffix),
+        KeyedFileSink.Output("failJson", outputJsonDir, RefConfig.AiFailedResponseSuffix)))
   }
 }

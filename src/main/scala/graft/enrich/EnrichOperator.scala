@@ -13,16 +13,23 @@ import scala.collection.mutable
   * process; here each of N partitions runs `maxConcurrent / N` workers and a
   * token bucket at `targetRpm / N`, so the global in-flight and request-rate
   * envelopes match the reference's semaphore + AsyncLimiter regardless of
-  * cluster size. Transport/pool lifecycle is per-partition (the analogue of
-  * the reference's pooled ClientSession). The limiter gates every transport
-  * ATTEMPT (retries included), like the reference's `async with rate_limiter`
-  * inside the retry loop (`src/program2_ai_processor.py:387-389`).
+  * cluster size. The shares add up to the envelope only while all N
+  * partitions run at once, so the input is first coalesced (no shuffle) to
+  * at most the cluster's default parallelism. Transport/pool lifecycle is
+  * per-partition (the analogue of the reference's pooled ClientSession).
+  * The limiter gates every transport ATTEMPT (retries included), like the
+  * reference's `async with rate_limiter` inside the retry loop
+  * (`src/program2_ai_processor.py:387-389`).
   *
   * Rows stream through the pool under a bounded in-flight window of
   * 2×concurrency: only O(concurrency) documents (and their responses) are
   * resident per partition at any moment, regardless of partition size —
   * `invokeAll` over the whole partition would OOM at 100 TB. Results preserve
   * input order within a partition (FIFO completion drain).
+  *
+  * The input is planned and run once: the RDD that gives N is the one the
+  * pools consume, so a broadcast join in the input (the skip-if-exists
+  * anti-join) broadcasts once.
   */
 object EnrichOperator {
 
@@ -44,7 +51,8 @@ object EnrichOperator {
       slotFactory: Option[() => RemoteConcurrencyLimiter] = None): Dataset[Enriched] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nParts = math.max(1, docs.rdd.getNumPartitions)
+    val input = docs.coalesce(spark.sparkContext.defaultParallelism).rdd
+    val nParts = math.max(1, input.getNumPartitions)
     // Exact global mode: each partition runs a FULL-width pool and the
     // driver's semaphore owns the global bound — one starved partition can
     // then use every slot the others leave idle (single-process semaphore
@@ -54,7 +62,7 @@ object EnrichOperator {
       else math.max(1, config.maxConcurrent / nParts)
     val perPartRpm = config.targetRpm.toDouble / nParts
 
-    docs.mapPartitions { rows =>
+    spark.createDataset(input.mapPartitions { rows =>
       if (rows.isEmpty) Iterator.empty
       else {
         val transport = transportFactory()
@@ -101,6 +109,6 @@ object EnrichOperator {
           }
         }
       }
-    }
+    })
   }
 }

@@ -16,10 +16,16 @@ import org.apache.spark.sql.functions._
 object Normalize {
   val Missing: String = RefConfig.MissingDataPlaceholder
 
-  /** P1: trim; null / "" / "N/A" (case-insensitive) → the missing sentinel. */
+  /** P1: trim; null / "" / "N/A" (case-insensitive) → the missing sentinel.
+    * The four spellings are every string that uppercases to "N/A" (`ŉ`
+    * uppercases to `ʼN`, fullwidth letters stay fullwidth), as the twin's
+    * `equalsIgnoreCase` reads them. `upper` would give the same answer, but
+    * its first call in a JVM loads ICU case-mapping data for over a second.
+    */
   def normalizeMissing(c: Column): Column = {
     val t = trim(c)
-    when(c.isNull || t === "" || upper(t) === "N/A", lit(Missing)).otherwise(t)
+    when(c.isNull || t === "" || t.isin("N/A", "n/a", "N/a", "n/A"), lit(Missing))
+      .otherwise(t)
   }
 
   /** F2: a full-match `-?\d+\.0` string renders as its integer part.

@@ -1,7 +1,6 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.util.LongAccumulator
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
@@ -22,54 +21,86 @@ import java.nio.charset.StandardCharsets
   */
 object KeyedFileSink {
 
+  /** One file per row of `column` with a non-null value, `dir/{key}{suffix}`. */
+  final case class Output(column: String, dir: String, suffix: String)
+
+  /** What a [[writeAll]] pass did: the rows it saw, and the files written
+    * for each output, in the order the outputs were given.
+    */
+  final case class Written(rows: Long, files: Seq[Long])
+
   /** Writes `contentCol` of each row to `outDir/{keyCol}{suffix}`.
     * @return number of files successfully written
     */
   def write(df: DataFrame, keyCol: String, contentCol: String, outDir: String,
-      suffix: String = ""): Long = {
-    val spark = df.sparkSession
-    Files.createDirectories(Paths.get(outDir))
-    val ok: LongAccumulator = spark.sparkContext.longAccumulator("keyed_files_written")
-    val projected = df.selectExpr(s"cast(`$keyCol` as string) as k", s"`$contentCol` as v")
+      suffix: String = ""): Long =
+    writeAll(df, keyCol, Seq(Output(contentCol, outDir, suffix))).files.head
+
+  /** Writes every output of each row in ONE pass over `df`: its rows are
+    * computed once, however many files each row yields.
+    */
+  def writeAll(df: DataFrame, keyCol: String, outputs: Seq[Output]): Written = {
+    val sc = df.sparkSession.sparkContext
+    val dirs = outputs.map(o => Paths.get(o.dir).toAbsolutePath.normalize())
+    dirs.foreach(Files.createDirectories(_))
+    val dirNames = dirs.map(_.toString)
+    val suffixes = outputs.map(_.suffix)
+    val seen = sc.longAccumulator("keyed_rows_seen")
+    val written = outputs.map(_ => sc.longAccumulator("keyed_files_written"))
+    val projected = df.selectExpr(s"cast(`$keyCol` as string) as k" +:
+      outputs.zipWithIndex.map { case (o, i) => s"`${o.column}` as v$i" }: _*)
     projected.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      val dir = Paths.get(outDir).toAbsolutePath.normalize()
+      val targets = dirNames.map(Paths.get(_))
       rows.foreach { row =>
+        seen.add(1)
         val key = row.getString(0)
-        val content = row.getString(1)
         // Keys are data-derived (e.g. CSV SchoolCode): reject anything that
-        // could resolve outside outDir (separators, '..') instead of writing
+        // could resolve outside a dir (separators, '..') instead of writing
         // it. The RAW key is validated, before suffixing — so key ".." is
         // rejected even though ".." + ".md" would be a legal in-dir name.
-        if (key != null && content != null && safeKey(key)) {
-          var tmp: Path = null
-          try {
-            val target = dir.resolve(key + suffix)
-            tmp = Files.createTempFile(dir, ".graft", ".tmp")
-            Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-            Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-              StandardCopyOption.REPLACE_EXISTING)
-            ok.add(1)
-          } catch {
-            case _: java.io.IOException | _: java.nio.file.InvalidPathException =>
-              // a failed row must not leave its temp behind
-              if (tmp != null) try Files.deleteIfExists(tmp) catch {
-                case _: java.io.IOException => ()
-              }
+        if (key != null && safeKey(key)) {
+          for (i <- targets.indices) {
+            val content = row.getString(i + 1)
+            if (content != null && writeFile(targets(i), key + suffixes(i), content))
+              written(i).add(1)
           }
         }
       }
     }
     // All tasks have finished (the action returned): any `.graft*.tmp` left
-    // in the directory is an orphan from a crashed task attempt — readers
-    // must only ever see fully-renamed files, so sweep them here.
-    val sweep = Files.newDirectoryStream(
-      Paths.get(outDir).toAbsolutePath.normalize(), ".graft*.tmp")
+    // in an output directory is an orphan from a crashed task attempt —
+    // readers must only ever see fully-renamed files, so sweep them here.
+    dirs.distinct.foreach(sweepOrphans)
+    Written(seen.value, written.map(_.value))
+  }
+
+  /** Temp file, then atomic rename onto `dir/name`; false if either failed. */
+  private def writeFile(dir: Path, name: String, content: String): Boolean = {
+    var tmp: Path = null
+    try {
+      val target = dir.resolve(name)
+      tmp = Files.createTempFile(dir, ".graft", ".tmp")
+      Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      true
+    } catch {
+      case _: java.io.IOException | _: java.nio.file.InvalidPathException =>
+        // a failed row must not leave its temp behind
+        if (tmp != null) try Files.deleteIfExists(tmp) catch {
+          case _: java.io.IOException => ()
+        }
+        false
+    }
+  }
+
+  private def sweepOrphans(dir: Path): Unit = {
+    val sweep = Files.newDirectoryStream(dir, ".graft*.tmp")
     try {
       sweep.forEach(p => try { Files.deleteIfExists(p); () } catch {
         case _: java.io.IOException => ()
       })
     } finally sweep.close()
-    ok.value
   }
 
   /** Lexical-only validation of a raw key: no path separators (either

@@ -318,7 +318,9 @@ object StreamingOps {
   /** Streaming enrichment: the incremental Program-2 mode. New markdown files
     * landing in `inDir` are enriched exactly once (checkpointed intake
     * replaces the reference's filesystem-existence check). Implemented with
-    * foreachBatch so each micro-batch reuses the batch EnrichOperator.
+    * foreachBatch: each micro-batch goes through the batch job's one-pass
+    * writer ([[graft.enrich.EnrichJob.writeEnriched]]), so it calls the
+    * transport once per document and writes the same three outputs.
     */
   def enrichStream(
       spark: SparkSession, inDir: String, outMdDir: String, outJsonDir: String,
@@ -343,14 +345,9 @@ object StreamingOps {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val enriched = EnrichOperator.enrich(
-          batch.as[EnrichOperator.Doc], transportFactory, promptTemplate,
-          config, limiterFactory = limiterFactory, slotFactory = slotFactory)
-        val ok = enriched.filter(col("ok")).toDF()
-        graft.sinks.KeyedFileSink.write(ok, "key", "description", outMdDir,
-          graft.core.RefConfig.AiProcessedSuffix)
-        graft.sinks.KeyedFileSink.write(ok, "key", "raw", outJsonDir,
-          graft.core.RefConfig.AiRawResponseSuffix)
+        EnrichJob.writeEnriched(batch.as[EnrichOperator.Doc], outMdDir, outJsonDir,
+          transportFactory, promptTemplate, config,
+          limiterFactory = limiterFactory, slotFactory = slotFactory)
         ()
       }
       .start()

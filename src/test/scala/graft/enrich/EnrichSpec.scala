@@ -7,6 +7,29 @@ import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
+/** Counts transport calls per document, by the `# <id>` heading of its
+  * prompt. A document whose text holds `RETRY` gets one 503 before its
+  * answer; one holding `FAIL` gets a 500 on every attempt.
+  */
+object DocCalls {
+  val calls = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  def of(id: String): Int = calls.getOrDefault(id, 0).toInt
+  def total: Int = calls.values.stream().mapToInt(_.intValue).sum
+  def reset(): Unit = calls.clear()
+}
+
+final class DocCallsTransport extends LlmTransport {
+  private val inner = new MockLlmTransport
+  override def post(p: LlmPayload): LlmResponse = {
+    val user = p.messages.find(_.role == "user").map(_.content).getOrElse("")
+    val id = "# (\\S+)".r.findFirstMatchIn(user).map(_.group(1)).getOrElse("?")
+    val n = DocCalls.calls.merge(id, 1, (a, b) => a + b)
+    if (user.contains("FAIL")) LlmResponse(500, "server error")
+    else if (user.contains("RETRY") && n == 1) LlmResponse(503, "unavailable")
+    else inner.post(p)
+  }
+}
+
 /** Mirrors the reference's mocked-session tests for the E1-E7 state machine
   * (`tests/test_program2_all.py:122-307`): 429 sleeps, 500-retry-then-fail,
   * network error, timeout, invalid JSON no-retry, empty choices/content with
@@ -154,5 +177,88 @@ class EnrichSpec extends SparkSpec {
     val failed = java.nio.file.Paths.get(s"$dir/outjson/X1_gpt4o_FAILED_response.json")
     assert(java.nio.file.Files.exists(failed))
     assert(new String(java.nio.file.Files.readAllBytes(failed), "UTF-8").contains("500"))
+  }
+
+  private def docsDir(prefix: String, docs: (String, String)*): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    java.nio.file.Files.createDirectories(dir.resolve("in"))
+    docs.foreach { case (id, text) => java.nio.file.Files.write(
+      dir.resolve(s"in/$id.md"), s"# $id\n$text".getBytes("UTF-8")) }
+    java.nio.file.Files.write(dir.resolve("prompt.txt"),
+      "SYSTEM:\nsys\nUSER:\n{school_data}".getBytes("UTF-8"))
+    dir.toString
+  }
+
+  private def runJob(dir: String, limit: Option[Int] = None): EnrichJob.Stats =
+    EnrichJob.run(spark, s"$dir/in", s"$dir/outmd", s"$dir/outjson",
+      s"$dir/prompt.txt", transportFactory = () => new DocCallsTransport,
+      limit = limit, sleeper = _ => ())
+
+  private def namesIn(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("EnrichJob calls the transport once per fresh document attempt") {
+    DocCalls.reset()
+    val dir = docsDir("enrich_calls", "E1" -> "data", "E2" -> "data",
+      "E3" -> "RETRY", "E4" -> "FAIL", "E5" -> "data")
+    assert(runJob(dir) == EnrichJob.Stats(5, 0, 5, 4, 1))
+    // ok documents once; the retried one twice; the permanent failure
+    // 1 + maxRetries times — never once more per output written
+    assert(Seq("E1", "E2", "E3", "E4", "E5").map(DocCalls.of) == Seq(1, 1, 2, 4, 1))
+    assert(namesIn(s"$dir/outmd") ==
+      Set("E1", "E2", "E3", "E5").map(_ + "_ai_description.md"))
+    assert(namesIn(s"$dir/outjson") ==
+      Set("E1", "E2", "E3", "E5").map(_ + "_gpt4o_response.json") +
+        "E4_gpt4o_FAILED_response.json")
+    // raw JSON is pretty-printed on both json outputs
+    val okJson = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/outjson/E1_gpt4o_response.json")), "UTF-8")
+    assert(okJson.startsWith("{\n  \""), okJson)
+
+    // rerun: only the failed document is fresh, and it is called again
+    DocCalls.reset()
+    assert(runJob(dir) == EnrichJob.Stats(5, 4, 1, 0, 1))
+    assert(DocCalls.calls.keySet().toArray.toSeq == Seq("E4") && DocCalls.of("E4") == 4)
+  }
+
+  test("EnrichJob runs in a fixed handful of Spark jobs, FAILED output or not") {
+    // a fresh output dir: the one enrich pass and the input count (two jobs,
+    // its partial counts and their sum). The plan with a sort, a cached
+    // result, two counts and three sink passes took 12 jobs on these inputs.
+    val docs = (1 to 8).map(i => s"J$i" -> "data")
+    val clean = docsDir("enrich_jobs", docs: _*)
+    val withFailure = docsDir("enrich_jobs_fail", docs.updated(3, "J4" -> "FAIL"): _*)
+    var stats = Seq.empty[EnrichJob.Stats]
+    val jobs = Seq(clean, withFailure).map(d => jobsDuring { stats :+= runJob(d) })
+    assert(stats == Seq(EnrichJob.Stats(8, 0, 8, 8, 0), EnrichJob.Stats(8, 0, 8, 7, 1)))
+    assert(namesIn(s"$withFailure/outjson").contains("J4_gpt4o_FAILED_response.json"))
+    assert(jobs == Seq(3, 3), s"jobs per EnrichJob.run: $jobs")
+  }
+
+  test("limit (O4) enriches the first n new keys in key order") {
+    val dir = docsDir("enrich_limit", "B200" -> "data", "A100" -> "data", "C300" -> "data")
+    assert(runJob(dir, limit = Some(1)) == EnrichJob.Stats(3, 2, 1, 1, 0))
+    assert(namesIn(s"$dir/outmd") == Set("A100_ai_description.md"))
+    assert(runJob(dir, limit = Some(1)) == EnrichJob.Stats(3, 2, 1, 1, 0))
+    assert(namesIn(s"$dir/outmd") ==
+      Set("A100_ai_description.md", "B200_ai_description.md"))
   }
 }

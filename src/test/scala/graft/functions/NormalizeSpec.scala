@@ -38,6 +38,22 @@ class NormalizeSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(Normalize.normalizeMissingStr("\t") == "\t")
   }
 
+  test("P1 without upper: the Column form and the twin agree with the upper(t) === \"N/A\" form") {
+    // the former Column form of P1, kept here as the oracle
+    def upperForm(c: org.apache.spark.sql.Column) = {
+      val t = trim(c)
+      when(c.isNull || t === "" || upper(t) === "N/A", lit(Normalize.Missing)).otherwise(t)
+    }
+    val inputs = Seq("N/A", "n/a", "N/a", "n/A", " n/A ", "\tn/a", "\u0149/a",
+      "\uff4e/\uff41", "NA", null, "")
+    val df = inputs.toDF("v")
+    val oracle = df.select(upperForm($"v")).as[String].collect().toSeq
+    assert(oracle == Seq.fill(5)(Normalize.Missing) ++ Seq("\tn/a", "\u0149/a",
+      "\uff4e/\uff41", "NA") ++ Seq.fill(2)(Normalize.Missing))
+    assert(colNorm(inputs) == oracle)
+    assert(inputs.map(Normalize.normalizeMissingStr) == oracle)
+  }
+
   test("F2 number format doctest cases") {
     val cases = Table(
       ("in", "out"),

@@ -132,6 +132,31 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/outmd/S2_ai_description.md")))
   }
 
+  test("enrichStream calls the transport once per document and writes the batch job's outputs") {
+    import graft.enrich.{DocCalls, DocCallsTransport}
+    val dir = Files.createTempDirectory("streamenrich-once").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+    val ids = (1 to 6).map(i => s"T$i")
+    ids.foreach(id => Files.write(java.nio.file.Paths.get(s"$dir/in/$id.md"),
+      (s"# $id\n" + (if (id == "T4") "FAIL" else "data")).getBytes))
+    DocCalls.reset()
+    val q = StreamingOps.enrichStream(spark, s"$dir/in", s"$dir/outmd",
+      s"$dir/outjson", "SYSTEM:\nsys\nUSER:\n{school_data}", s"$dir/ckpt",
+      transportFactory = () => new DocCallsTransport,
+      config = graft.enrich.EnrichConfig(maxRetries = 0))
+    try q.processAllAvailable() finally q.stop()
+    // one micro-batch of 6 documents: 6 calls (T4 fails with no retry)
+    assert(ids.map(DocCalls.of) == Seq.fill(6)(1) && DocCalls.total == 6)
+    def names(d: String) = new java.io.File(d).list().toSet
+    val ok = ids.filterNot(_ == "T4")
+    assert(names(s"$dir/outmd") == ok.map(_ + "_ai_description.md").toSet)
+    assert(names(s"$dir/outjson") == ok.map(_ + "_gpt4o_response.json").toSet +
+      "T4_gpt4o_FAILED_response.json")
+    val raw = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/outjson/T1_gpt4o_response.json")), "UTF-8")
+    assert(raw.startsWith("{\n  \""), s"raw JSON not pretty-printed: $raw")
+  }
+
   test("enrichStream budgets micro-batches through the exact global limiters") {
     import graft.enrich._
     val dir = Files.createTempDirectory("streamenrich-cap").toString
