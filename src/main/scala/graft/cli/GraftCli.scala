@@ -741,7 +741,8 @@ object GraftCli {
           // reads, drift-ledger tail, and the writer lease — the numbers an
           // on-call person needs BEFORE deciding ann-maintain/ann-rebuild/
           // compact-index, gathered from footer metadata only (no data scan)
-          import graft.operators.{AnnMaintenance, IncrementalDedup, IndexFs, IndexLease}
+          import graft.operators.{AnnMaintenance, IncrementalDedup, IndexFs,
+            IndexLease, IndexLedger}
           val root = IncrementalDedup.readRoot(dir)
           val gens = IncrementalDedup.generations(dir)
           val isAnn = IndexFs.exists(s"$root/centroids")
@@ -754,11 +755,8 @@ object GraftCli {
             val nCells = spark.read.parquet(s"$root/centroids").count()
             val rows = spark.read.parquet(s"$root/cells").count()
             val ts = s"$root/tombstones"
-            val (nTs, tsFiles) =
-              if (IndexFs.exists(ts)) {
-                val t = spark.read.parquet(ts)
-                (t.count(), t.inputFiles.length)
-              } else (0L, 0)
+            val nTs = IndexLedger.rows(ts)
+            val tsFiles = IndexFs.fileNames(ts).count(_.endsWith(".parquet"))
             val (nUp, upFiles) =
               if (IndexFs.exists(s"$root/upserts")) {
                 val u = spark.read.parquet(s"$root/upserts")
@@ -778,18 +776,19 @@ object GraftCli {
                 "maintain compacts past maxTombstoneFraction)")
             else println("  tombstones: none")
             val logDir = s"$root/drift_log"
-            if (IndexFs.exists(logDir)) {
-              import org.apache.spark.sql.functions.col
-              val tail = spark.read.parquet(logDir)
-                .orderBy(col("seq").desc).limit(3)
-                .select("seq", "ratio", "mixture_tv").collect()
-              val s2 = tail.map(r => f"seq=${r.getLong(0)} " +
-                f"ratio=${if (r.isNullAt(1)) "-" else f"${r.getDouble(1)}%.3f"} " +
-                f"tv=${if (r.isNullAt(2)) "-" else f"${r.getDouble(2)}%.3f"}")
-              println(s"  drift ledger: ${spark.read.parquet(logDir).count()} " +
-                s"append(s); tail: ${s2.mkString(" | ")}")
-            } else println("  drift ledger: none (appends have not gone " +
-              "through AnnMaintenance.append)")
+            IndexLedger.read(spark, logDir, AnnMaintenance.DriftLogSchema) match {
+              case Some(log) =>
+                import org.apache.spark.sql.functions.col
+                val tail = log.orderBy(col("seq").desc).limit(3)
+                  .select("seq", "ratio", "mixture_tv").collect()
+                val s2 = tail.map(r => f"seq=${r.getLong(0)} " +
+                  f"ratio=${if (r.isNullAt(1)) "-" else f"${r.getDouble(1)}%.3f"} " +
+                  f"tv=${if (r.isNullAt(2)) "-" else f"${r.getDouble(2)}%.3f"}")
+                println(s"  drift ledger: ${IndexLedger.rows(logDir)} " +
+                  s"append(s); tail: ${s2.mkString(" | ")}")
+              case None => println("  drift ledger: none (appends have not " +
+                "gone through AnnMaintenance.append)")
+            }
           } else if (IndexFs.exists(s"$root/postings") &&
               IndexFs.exists(s"$root/meta")) {
             // the lexical (BM25) layout: postings + doclens + stats ledger
@@ -798,17 +797,17 @@ object GraftCli {
             val nDocs = spark.read.parquet(s"$root/doclens").count()
             val nPost = spark.read.parquet(s"$root/postings").count()
             val statFiles = spark.read.parquet(s"$root/stats").inputFiles.length
-            val ts = s"$root/tombstones"
-            val (nDel, nFloors) =
-              if (!IndexFs.exists(ts)) (0L, 0L)
-              else {
-                import org.apache.spark.sql.functions.{col => c, lit => l}
-                val t = spark.read.parquet(ts)
-                val below = if (t.columns.contains("below")) c("below")
-                  else l(Long.MaxValue)
-                (t.where(below === Long.MaxValue).count(),
-                  t.where(below =!= Long.MaxValue).count())
-              }
+            // an entry's `below` alone tells a deletion (MaxValue, or null
+            // in a legacy id-only row) from a version floor
+            val (nDel, nFloors) = IndexLedger.read(spark, s"$root/tombstones",
+                new org.apache.spark.sql.types.StructType()
+                  .add("below", org.apache.spark.sql.types.LongType))
+              .map { t =>
+                import org.apache.spark.sql.functions.{coalesce, col, lit}
+                val del = t.where(coalesce(col("below"),
+                  lit(Long.MaxValue)) === Long.MaxValue).count()
+                (del, IndexLedger.rows(s"$root/tombstones") - del)
+              }.getOrElse((0L, 0L))
             println(s"index-status: $dir")
             println(s"  layout: lexical (bm25)  buckets: $nBuckets  " +
               s"docs: $nDocs  postings: $nPost  stats files: $statFiles" +
@@ -838,8 +837,7 @@ object GraftCli {
               case Some(df) => s"delta (${df.columns.mkString(",")})"
               case None => "delta (all-empty — no rows admitted yet)"
             }
-            val ts = s"$root/_tombstones"
-            val nTs = if (IndexFs.exists(ts)) spark.read.parquet(ts).count() else 0L
+            val nTs = IndexLedger.rows(s"$root/_tombstones")
             println(s"index-status: $dir")
             println(s"  layout: $kind  batches: $batches  rows: " +
               s"${dfOpt.map(_.count()).getOrElse(0L)}" +
@@ -849,9 +847,9 @@ object GraftCli {
               "or compact-index)" else "  tombstones: none")
             // re-crawl hygiene state (upsertAdmission): superseded sig
             // versions pending the physical drop, and the carrier ledger
-            if (IndexFs.exists(s"$root/_floors"))
-              println(s"  version floors: " +
-                s"${spark.read.parquet(s"$root/_floors").count()} " +
+            val nFloors = IndexLedger.rows(s"$root/_floors")
+            if (nFloors > 0)
+              println(s"  version floors: $nFloors " +
                 "(superseded versions of changed pages — resolved at " +
                 "compact-index/admission-maintain)")
             if (IndexFs.exists(s"$root/_carriers"))

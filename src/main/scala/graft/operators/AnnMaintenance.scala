@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Closes the ANN drift→rebuild loop as POLICY, not supervision.
   *
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage: route appends through [[append]] (it dispatches on the layout
   * and records each drift reading in `indexDir/drift_log` — a one-row
-  * parquet per append, the ledger discipline), then call [[maintain]]
+  * file per append, an [[IndexLedger]]), then call [[maintain]]
   * after each batch (or on the daemon's cadence). `maintain` rebuilds iff
   *  - the last `sustainAppends` SPREAD readings ALL exceed `maxDriftRatio`
   *    (sustained drift — one hot batch is not a trend), or
@@ -128,6 +129,15 @@ object AnnMaintenance {
       compacted: Boolean = false,
       upsertFraction: Option[Double] = None)
 
+  /** The schema [[append]] writes the drift log with. A log written before
+    * the `mixture_tv` column reads it as null: no mixture reading.
+    */
+  private[graft] val DriftLogSchema = StructType(Seq(
+    StructField("seq", LongType), StructField("n", LongType),
+    StructField("mean_l2sq", DoubleType),
+    StructField("baseline_mean_l2sq", DoubleType),
+    StructField("ratio", DoubleType), StructField("mixture_tv", DoubleType)))
+
   /** Layout dispatch + ledger probes resolve through the Hadoop
     * FileSystem API ([[IndexFs]]): with a local-only probe, a composed
     * index on an HDFS/S3 URI would read as plain IVF and [[append]] would
@@ -146,10 +156,11 @@ object AnnMaintenance {
     * fold rewrites the log this method appends to), compact, rebuild and
     * delete all acquire `<indexDir>._lease`, so a daemon's append can no
     * longer interleave with a concurrent maintain's fold — the loser
-    * fails loudly instead. The sequence number is `max(seq) + 1` over the
-    * existing log — NOT the row count, so a partially failed append
-    * (cells written, ledger write crashed, then retried) can never mint a
-    * duplicate seq and make [[maintain]]'s recency tail nondeterministic;
+    * fails loudly instead. The sequence number is the log's
+    * [[IndexLedger.nextStamp]] — NOT the row count, so a partially failed
+    * append (cells written, ledger write crashed, then retried) can never
+    * mint a duplicate seq and make [[maintain]]'s recency tail
+    * nondeterministic;
     * a retry simply takes the next number.
     */
   def append(spark: SparkSession, indexDir: String, newVectors: DataFrame,
@@ -162,19 +173,10 @@ object AnnMaintenance {
     import spark.implicits._
     // the ledger lives inside the generation the append just extended
     val logRoot = s"${IncrementalDedup.readRoot(indexDir)}/drift_log"
-    IncrementalDedup.recoverDir(logRoot) // crashed ledger fold
-    val seq =
-      if (IndexFs.exists(logRoot)) {
-        val m = spark.read.parquet(logRoot)
-          .agg(max(col("seq"))).head()
-        if (m.isNullAt(0)) 0L else m.getLong(0) + 1L
-      } else 0L
-    Seq((seq, st.n, st.meanL2sq, st.baselineMeanL2sq, st.driftRatio,
-        st.mixtureTv))
-      .toDF("seq", "n", "mean_l2sq", "baseline_mean_l2sq", "ratio",
-        "mixture_tv")
-      .coalesce(1)
-      .write.mode("append").parquet(logRoot)
+    val seq = IndexLedger.nextStamp(spark, logRoot, "seq")
+    IndexLedger.append(Seq((seq, st.n, st.meanL2sq, st.baselineMeanL2sq,
+        st.driftRatio, st.mixtureTv)).toDF(DriftLogSchema.fieldNames: _*),
+      logRoot)
     st
   }
 
@@ -192,36 +194,17 @@ object AnnMaintenance {
     val root = IncrementalDedup.readRoot(indexDir)
     import spark.implicits._
     val logDir = s"$root/drift_log"
-    IncrementalDedup.recoverDir(logDir) // crashed ledger fold from a prior run
-    val hasLog = IndexFs.exists(logDir)
-    // ledger hygiene: every append lands one tiny parquet file and a
-    // daemon appending per snapshot accumulates thousands — which THIS
-    // read then pays for, forever. Past a small file budget, fold the
-    // whole (one-row-per-append) log into one file behind the usual
-    // staged swap; rows are untouched, so the recency tail below reads
-    // the same. [[Similarity.ivfCompact]] carries the ledger the same
-    // way, so neither maintenance path unbounds the other's file count.
-    // The fold is a read-modify-write of a table [[append]] appends to —
-    // safe because BOTH run under the index writer lease ([[IndexLease]],
-    // acquired by this method's wrapper): a daemon appending concurrently
-    // fails loudly at acquire instead of losing its row to the swap.
-    if (hasLog && IndexFs.fileNames(logDir).count(_.endsWith(".parquet")) > 16) {
-      val snap = spark.read.parquet(logDir).localCheckpoint()
-      IncrementalDedup.clearStaging(s"$logDir.next")
-      snap.coalesce(1).write.parquet(s"$logDir.next")
-      IncrementalDedup.replaceDir(logDir, s"$logDir.next")
-    }
-    val logDf = if (hasLog) Some(spark.read.parquet(logDir))
-      else None
+    // the log folds here, not on append: rows are untouched (identity
+    // fold), so the recency tail below reads the same, and
+    // [[Similarity.ivfCompact]] carries it as one file
+    IndexLedger.fold(spark, logDir, DriftLogSchema, identity)
+    val logDf = IndexLedger.read(spark, logDir, DriftLogSchema)
     val log = logDf.map { df =>
-      // tolerate pre-mixture ledgers: the column joined the schema later
-      val tv = if (df.columns.contains("mixture_tv")) col("mixture_tv")
-        else lit(null).cast("double").as("mixture_tv")
       df.orderBy(col("seq").desc).limit(policy.sustainAppends)
-        .select(col("seq"), col("ratio"), tv)
+        .select(col("seq"), col("ratio"), col("mixture_tv"))
         .as[(Long, Option[Double], Option[Double])].collect().toSeq
     }.getOrElse(Seq.empty)
-    val appends = logDf.map(_.count()).getOrElse(0L)
+    val appends = IndexLedger.rows(logDir)
     val ordered = log.sortBy(_._1)
     val recent = ordered.flatMap(_._2)
     val recentTv = ordered.flatMap(_._3)
@@ -248,17 +231,12 @@ object AnnMaintenance {
     // reads (no data pages); the fraction slightly overcounts when a
     // tombstone names an id the index never held (harmless tombstoning),
     // which only makes the compact EARLIER, never missed.
-    val tsDir = s"$root/tombstones"
     val tombstoneFraction: Option[Double] = policy.maxTombstoneFraction
       .flatMap { _ =>
-        IncrementalDedup.recoverDir(tsDir)
-        if (!IndexFs.exists(tsDir)) None
-        else {
-          val nTs = spark.read.parquet(tsDir).count()
-          if (nTs == 0L) None
-          else Some(nTs.toDouble /
-            math.max(1L, spark.read.parquet(s"$root/cells").count()))
-        }
+        val nTs = IndexLedger.rows(s"$root/tombstones")
+        if (nTs == 0L) None
+        else Some(nTs.toDouble /
+          math.max(1L, spark.read.parquet(s"$root/cells").count()))
       }
     val tombstonePressure = (for {
       t <- policy.maxTombstoneFraction; f <- tombstoneFraction

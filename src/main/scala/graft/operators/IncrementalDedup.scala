@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Incremental corpus admission: dedup a NEW batch of documents against a
   * persisted fingerprint index built from everything already admitted, then
@@ -94,103 +95,57 @@ object IncrementalDedup {
 
   // -------------------------------------------------------- index deletion
 
-  /** Generic tombstone layer shared by every persisted index family (the
+  /** Generic tombstone ledger shared by every persisted index family (the
     * ANN cell layouts via [[Similarity.ivfDelete]], the fp/sig admission
     * delta indexes via [[deleteFingerprints]]/[[deleteSignatureIds]]):
-    * a small keys-only parquet table beside the layout that reads
-    * anti-join (broadcast — deletion sets are small relative to an
-    * index) and compactions/rebuilds physically resolve. Deleting is an
-    * APPEND of keys; clearing (re-admission) is a staged+swapped rewrite,
-    * healed by the same `recoverDir` discipline as every other swap.
+    * a keys-only [[IndexLedger]] beside the layout that reads anti-join
+    * (broadcast — deletion sets are small relative to an index) and
+    * compactions/rebuilds physically resolve. Deleting is an APPEND of
+    * keys, folded to distinct keys; clearing (re-admission) is a ledger
+    * rewrite.
     *
     * @return number of distinct keys in this delete batch
     */
   private[graft] def appendTombstones(spark: org.apache.spark.sql.SparkSession,
       tsDir: String, keys: DataFrame, keyCol: String): Long = {
-    recoverDir(tsDir)
     val del = keys.select(col(keyCol)).distinct().localCheckpoint()
     val n = del.count()
     if (n > 0) {
-      del.coalesce(1).write.mode("append").parquet(tsDir)
-      // ledger hygiene (the drift_log discipline): every delete batch
-      // lands one file and EVERY read pays the listing+footer overhead
-      // forever — past a small budget, fold the whole table to one
-      // distinct-keys file behind the usual staged swap. Runs under the
-      // caller's index lease (the public delete surfaces hold it), so no
-      // concurrent takedown can land inside the read-modify-write.
-      // file-count check via a pure fs listing: `spark.read.parquet(tsDir)
-      // .inputFiles` paid a footer-read/schema-inference Spark job PER
-      // DELETE BATCH just to count files (round-21 OptProbe: 18 such jobs
-      // inside t134's takedown loop); the tombstone dir is flat, so the
-      // name listing counts the same part files for free
-      if (IndexFs.fileNames(tsDir).count(_.endsWith(".parquet")) > 16) {
-        val snap = spark.read.parquet(tsDir).select(col(keyCol)).distinct()
-          .localCheckpoint()
-        clearStaging(s"$tsDir.next")
-        snap.coalesce(1).write.parquet(s"$tsDir.next")
-        replaceDir(tsDir, s"$tsDir.next")
-      }
+      IndexLedger.append(del, tsDir)
+      IndexLedger.fold(spark, tsDir,
+        tombstoneSchema(keyCol, keys.schema(keyCol).dataType), _.distinct())
     }
     n
   }
 
+  /** The schema [[appendTombstones]] writes: the key alone, typed like
+    * the data's key column.
+    */
+  private[graft] def tombstoneSchema(keyCol: String, keyType: DataType) =
+    StructType(Seq(StructField(keyCol, keyType)))
+
   /** The LIVE view: `df` minus the tombstoned keys (a no-op plan when no
-    * tombstone table exists). Heals a crashed tombstone-rewrite swap
-    * first — its crash window leaves no live table but a complete
-    * `.old`, and without the rollback every deleted key would silently
-    * resurface. The keys-only table is read with its known schema, the
-    * key typed like `df`'s key column — no schema-inference job per read.
+    * tombstone table exists).
     */
   private[graft] def applyTombstones(spark: org.apache.spark.sql.SparkSession,
-      tsDir: String, df: DataFrame, keyCol: String): DataFrame = {
-    recoverDir(tsDir)
-    if (!IndexFs.exists(tsDir)) df
-    else df.join(
-      broadcast(spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(keyCol,
-            df.schema(keyCol).dataType))))
-        .parquet(tsDir).distinct()),
-      Seq(keyCol), "left_anti")
-  }
+      tsDir: String, df: DataFrame, keyCol: String): DataFrame =
+    IndexLedger.read(spark, tsDir,
+        tombstoneSchema(keyCol, df.schema(keyCol).dataType))
+      .fold(df)(ts => df.join(broadcast(ts.distinct()), Seq(keyCol), "left_anti"))
 
   /** Remove `keys` from a tombstone table (re-added rows become live
     * again). Callers run this AFTER the re-adding write lands — a crash
     * between the two leaves the new rows hidden and the write's replay
     * heals; the reverse order could resurrect keys whose rows never
-    * landed.
+    * landed. A takedown appended during the rewrite is carried, not
+    * un-deleted (see [[IndexLedger.rewrite]]).
     */
   private[graft] def removeTombstones(spark: org.apache.spark.sql.SparkSession,
-      tsDir: String, keys: DataFrame, keyCol: String): Unit = {
-    recoverDir(tsDir)
-    if (!IndexFs.exists(tsDir)) return
-    // Snapshot the FILE SET, not just the rows: this is a read-modify-
-    // write rewrite, and a takedown batch appended between the snapshot
-    // read and the swap must not be silently un-deleted (the takedown
-    // reported success — discarding it is the exact resurface failure
-    // ivfDelete's guard exists to prevent). Only the snapshot's keys are
-    // subtracted; files that arrive during the rewrite are carried into
-    // the new table VERBATIM. The residual window (an append between the
-    // late-file listing and replaceDir's renames) is closed by the index
-    // writer lease ([[IndexLease]]), which every public delete/readmit
-    // surface holds.
-    val snapFiles = IndexFs.fileNames(tsDir).filter(_.endsWith(".parquet"))
-    if (snapFiles.isEmpty) return // no tombstones recorded — nothing to clear
-    val remaining = spark.read
-      .parquet(snapFiles.map(f => s"$tsDir/$f"): _*)
-      .select(col(keyCol)).distinct()
-      .join(keys.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-      .localCheckpoint()
-    clearStaging(s"$tsDir.next")
-    remaining.coalesce(1).write.parquet(s"$tsDir.next")
-    val late = IndexFs.fileNames(tsDir)
-      .filter(f => f.endsWith(".parquet") && !snapFiles.contains(f))
-    late.foreach(f => IndexFs.rename(s"$tsDir/$f", s"$tsDir.next/$f"))
-    if (late.isEmpty && remaining.isEmpty) {
-      // fully cleared: drop the table so reads keep their no-op plan
-      clearStaging(s"$tsDir.next")
-      IndexFs.deleteRecursive(tsDir)
-    } else replaceDir(tsDir, s"$tsDir.next")
-  }
+      tsDir: String, keys: DataFrame, keyCol: String): Unit =
+    IndexLedger.rewrite(spark, tsDir,
+      tombstoneSchema(keyCol, keys.schema(keyCol).dataType),
+      _.distinct().join(keys.select(col(keyCol)).distinct(), Seq(keyCol),
+        "left_anti"))
 
   /** Tombstone-DELETE fingerprints from a persisted exact-admission index
     * (takedowns / re-filtering): the keys land in `dir/_tombstones` — the
@@ -240,26 +195,26 @@ object IncrementalDedup {
     * [[graft.operators.LexIndex]] versioned-ledger discipline applied to
     * the signature admission index, where a re-crawled CHANGED page lands
     * a NEW (id, sig) row beside its old one and a plain id-keyed
-    * tombstone would hide both. Floors only ever rise (max `below` per id
-    * wins), so appends are idempotent under replay; the same >16-file
-    * fold bounds the ledger's small-file growth.
+    * tombstone would hide both. Floors only ever rise, so the ledger folds
+    * to the max `below` per id.
     */
   private[graft] def appendFloors(spark: org.apache.spark.sql.SparkSession,
       floorsDir: String, entries: DataFrame): Unit = {
-    recoverDir(floorsDir)
     val add = entries.select(col("id"), col("below").cast("long"))
       .localCheckpoint()
     if (add.isEmpty) return
-    add.coalesce(1).write.mode("append").parquet(floorsDir)
-    if (IndexFs.fileNames(floorsDir).count(_.endsWith(".parquet")) > 16) {
-      val snap = spark.read.parquet(floorsDir)
-        .groupBy(col("id")).agg(max(col("below")).as("below"))
-        .localCheckpoint()
-      clearStaging(s"$floorsDir.next")
-      snap.coalesce(1).write.parquet(s"$floorsDir.next")
-      replaceDir(floorsDir, s"$floorsDir.next")
-    }
+    IndexLedger.append(add, floorsDir)
+    IndexLedger.fold(spark, floorsDir, floorsSchema(add.schema("id").dataType),
+      maxFloors)
   }
+
+  /** The schema [[appendFloors]] writes, `id` typed like the index's. */
+  private def floorsSchema(idType: DataType) =
+    StructType(Seq(StructField("id", idType), StructField("below", LongType)))
+
+  /** The floors fold: the highest floor per id. */
+  private def maxFloors(floors: DataFrame): DataFrame =
+    floors.groupBy(col("id")).agg(max(col("below")).as("below"))
 
   /** The floor-aware view of a sig-index read: rows whose `batch` sits
     * below their id's floor are superseded versions of a changed page
@@ -269,23 +224,19 @@ object IncrementalDedup {
     */
   private[graft] def applyVersionFloors(
       spark: org.apache.spark.sql.SparkSession, floorsDir: String,
-      df: DataFrame, idCol: String): DataFrame = {
-    recoverDir(floorsDir)
-    if (!IndexFs.exists(floorsDir)) df
-    else {
-      require(df.columns.contains("batch"),
-        "version floors exist but the read carries no batch column — " +
-          "floors are delta-mode state and every delta read is " +
-          "batch-partitioned")
-      val floors = spark.read.parquet(floorsDir)
-        .groupBy(col("id")).agg(max(col("below")).as("__below"))
-        .withColumnRenamed("id", idCol)
-      df.join(broadcast(floors), Seq(idCol), "left")
-        .where(col("__below").isNull ||
-          col("batch").cast("long") >= col("__below"))
-        .drop("__below")
-    }
-  }
+      df: DataFrame, idCol: String): DataFrame =
+    IndexLedger.read(spark, floorsDir, floorsSchema(df.schema(idCol).dataType))
+      .fold(df) { floors =>
+        require(df.columns.contains("batch"),
+          "version floors exist but the read carries no batch column — " +
+            "floors are delta-mode state and every delta read is " +
+            "batch-partitioned")
+        df.join(broadcast(maxFloors(floors).withColumnRenamed("below", "__below")
+            .withColumnRenamed("id", idCol)), Seq(idCol), "left")
+          .where(col("__below").isNull ||
+            col("batch").cast("long") >= col("__below"))
+          .drop("__below")
+      }
 
   /** UPSERT hygiene for the admission indexes — the re-crawl verb the fp
     * and sig tiers lacked (ANN and lexical both gained theirs in round
@@ -375,13 +326,13 @@ object IncrementalDedup {
     * delete the old copy — at every instant at least one complete index
     * exists in the store. INDEX-ROOT swaps use [[commitGeneration]]
     * instead (reader-safe: a mid-scan query survives the swap); this
-    * legacy form remains for the small LEDGER rewrites (tombstone folds,
-    * the drift-log fold, the dataset manifest) — one-file tables swapped
-    * in milliseconds under the writer lease, where a per-rewrite
-    * generation would tax every listing for a window no real scan can
-    * straddle. A crash between the two renames leaves no live
-    * dir but BOTH `liveDir.old` (the previous index, intact) and `nextDir`
-    * (the new index, complete) for one-rename recovery; the earlier
+    * form remains for the small [[IndexLedger]] rewrites and the dataset
+    * manifest — one-file tables swapped in milliseconds under the writer
+    * lease, where a per-rewrite generation would tax every listing for a
+    * window no real scan can straddle. A crash between the two renames
+    * leaves no live dir but BOTH `liveDir.old` (the previous index,
+    * intact) and `nextDir` (the new index, complete) for one-rename
+    * recovery; the earlier
     * delete-then-move discipline destroyed the old index BEFORE the new
     * one was in place, so that same crash window lost everything.
     *
@@ -456,12 +407,9 @@ object IncrementalDedup {
     * retired when the SECOND generation commits. Crash windows: the
     * rename either happened or did not (no torn state to heal); a crash
     * during retirement leaves partially-deleted OLD generations that no
-    * reader resolves (max wins) and the next commit re-retires. The
-    * tombstone-LEDGER rewrites ([[appendTombstones]]'s fold,
-    * [[removeTombstones]]) deliberately keep the legacy [[replaceDir]]:
-    * they are one-file tables swapped in milliseconds under the writer
-    * lease, and a per-rewrite generation would litter every query's
-    * listing for a window no real scan can straddle.
+    * reader resolves (max wins) and the next commit re-retires. Ledger
+    * folds and rewrites ([[IndexLedger.fold]], [[IndexLedger.rewrite]])
+    * keep [[replaceDir]] (see there for why).
     */
   def commitGeneration(liveDir: String, nextDir: String,
       keep: Int = 2): Unit = {
@@ -541,19 +489,10 @@ object IncrementalDedup {
     require(kind == "fp" || kind == "sig", s"kind must be fp|sig, got '$kind'")
     require(maxTombstoneFraction > 0 && maxTombstoneFraction < 1)
     val root = readRoot(indexDir)
-    val tsDir = s"$root/_tombstones"
-    recoverDir(tsDir)
     // floors (superseded versions of changed pages) are read-side join
     // work exactly like tombstones — both count toward the pressure
-    val floorsDir = s"$root/_floors"
-    recoverDir(floorsDir)
-    val nFloors =
-      if (kind == "sig" && IndexFs.exists(floorsDir))
-        spark.read.parquet(floorsDir).count()
-      else 0L
-    if (!IndexFs.exists(tsDir) && nFloors == 0) return false
-    val nTs = (if (IndexFs.exists(tsDir))
-      spark.read.parquet(tsDir).count() else 0L) + nFloors
+    val nTs = IndexLedger.rows(s"$root/_tombstones") +
+      (if (kind == "sig") IndexLedger.rows(s"$root/_floors") else 0L)
     if (nTs == 0) return false
     val rows =
       try spark.read.parquet(root).count()

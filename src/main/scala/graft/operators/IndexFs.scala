@@ -113,6 +113,17 @@ object IndexFs {
     finally reader.close()
   }
 
+  /** The row count a parquet file's footer records, read on the driver —
+    * no Spark job.
+    */
+  def parquetRowCount(p: String): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(p), hadoopConf()))
+    try reader.getRecordCount
+    finally reader.close()
+  }
+
   /** Write a small UTF-8 text artifact (tokenizer merges, lease markers),
     * overwriting any existing file — resolved through the path's
     * filesystem like every other lifecycle touch, so the artifact can

@@ -34,10 +34,9 @@ import org.apache.spark.sql.types._
   *    one entry per event, `(id, below, at)` — rows of the id with
   *    `batch < below` are hidden, `below = Long.MaxValue` is a full
   *    deletion, and the LATEST entry per id wins (so [[upsert]]
-  *    resurrects and [[delete]] outranks stored versions). Append-only,
-  *    folded to latest-per-id past a small file budget, physically
-  *    resolved by [[compact]]; legacy id-only tables read as full
-  *    deletions and migrate on the first versioned write.
+  *    resurrects and [[delete]] outranks stored versions). An
+  *    [[IndexLedger]] folded to latest-per-id, physically resolved by
+  *    [[compact]]; legacy id-only rows read as full deletions.
   *
   * Numeric contract: index-served scores are BIT-IDENTICAL to
   * [[TextSearch.bm25TopK]] over the live corpus (spec-pinned, and the
@@ -303,35 +302,32 @@ object LexIndex {
     // report "no tombstones" here and the subsequent append (which does
     // heal the dir) would then throw the re-add guard mid-batch
     val t = s"${IncrementalDedup.readRoot(indexDir)}/tombstones"
-    IncrementalDedup.recoverDir(t)
-    if (!IndexFs.exists(t)) (docs, docs.limit(0))
-    else {
-      // only FULL deletions (latest entry = delete) defer — an id whose
-      // latest entry is an UPSERT version floor is alive and re-ingests
-      // through [[upsert]]
-      val tomb = broadcast(latestTs(spark, t, docs.schema(idCol).dataType)
-        .where(col("below") === Long.MaxValue).select(col("id")).distinct())
-      (docs.join(tomb.withColumnRenamed("id", idCol), Seq(idCol), "left_anti"),
-        docs.join(tomb.withColumnRenamed("id", idCol), Seq(idCol), "left_semi"))
+    ledger(spark, t, docs.schema(idCol).dataType) match {
+      case None => (docs, docs.limit(0))
+      case Some(ts) =>
+        // only FULL deletions (latest entry = delete) defer — an id whose
+        // latest entry is an UPSERT version floor is alive and re-ingests
+        // through [[upsert]]
+        val tomb = broadcast(latestTs(ts)
+          .where(col("below") === Long.MaxValue).select(col("id")).distinct())
+        (docs.join(tomb.withColumnRenamed("id", idCol), Seq(idCol), "left_anti"),
+          docs.join(tomb.withColumnRenamed("id", idCol), Seq(idCol), "left_semi"))
     }
   }
 
   private def requireNotTombstoned(spark: SparkSession, indexDir: String,
       docs: DataFrame, idCol: String): Unit = {
-    val t = s"$indexDir/tombstones"
-    IncrementalDedup.recoverDir(t)
-    if (!IndexFs.exists(t)) return
-    val sample = docs.select(col(idCol).as("id")).distinct()
-      .join(broadcast(spark.read
-          .schema(tombstoneSchema(docs.schema(idCol).dataType)).parquet(t)
-          .select(col("id")).distinct()),
-        Seq("id"), "left_semi")
-      .limit(4).collect().map(_.get(0))
-    require(sample.isEmpty,
-      s"append batch re-uses ids with tombstone entries " +
-        s"(${sample.mkString(", ")} …): deleted or replaced documents go " +
-        "through upsert (which versions them) or wait for a compact; " +
-        "append is for NEW ids only")
+    ledger(spark, s"$indexDir/tombstones", docs.schema(idCol).dataType)
+      .foreach { ts =>
+        val sample = docs.select(col(idCol).as("id")).distinct()
+          .join(broadcast(ts.select(col("id")).distinct()), Seq("id"), "left_semi")
+          .limit(4).collect().map(_.get(0))
+        require(sample.isEmpty,
+          s"append batch re-uses ids with tombstone entries " +
+            s"(${sample.mkString(", ")} …): deleted or replaced documents go " +
+            "through upsert (which versions them) or wait for a compact; " +
+            "append is for NEW ids only")
+      }
   }
 
   /** The tombstone LEDGER, versioned (round 19): one entry per event,
@@ -342,20 +338,26 @@ object LexIndex {
     * outranks the deletion). Read with its known schema, the key typed
     * like the data's `id`; legacy id-only rows read their missing columns
     * as null, which maps to (below = MaxValue, at = 0) — exactly what
-    * those deletes meant — and such tables are migrated in place on the
-    * first versioned write. Folded to latest-per-id past a small file
-    * budget (the ledger hygiene every delete table here has).
+    * those deletes meant.
     */
-  private[operators] def latestTs(spark: SparkSession, tsDir: String,
-      idType: DataType): DataFrame =
-    // latest entry per id: max (at, below) — `at` strictly increases
-    // under the writer lease; the `below` tiebreak only orders legacy
-    // all-at-0 rows (all deletions) deterministically
-    spark.read.schema(tombstoneSchema(idType)).parquet(tsDir)
-      .groupBy(col("id"))
+  private def ledger(spark: SparkSession, tsDir: String,
+      idType: => DataType): Option[DataFrame] =
+    IndexLedger.read(spark, tsDir, tombstoneSchema(idType))
+
+  /** The ledger's fold: the latest entry per id, `(id, below, at)` — max
+    * (at, below), where `at` strictly increases under the writer lease
+    * and the `below` tiebreak only orders legacy all-at-0 rows (all
+    * deletions) deterministically.
+    */
+  private def latestEntries(ts: DataFrame): DataFrame =
+    ts.groupBy(col("id"))
       .agg(max(struct(coalesce(col("at"), lit(0L)).as("at"),
         coalesce(col("below"), lit(Long.MaxValue)).as("below"))).as("__e"))
-      .select(col("id"), col("__e.below").as("below"))
+      .select(col("id"), col("__e.below").as("below"), col("__e.at").as("at"))
+
+  /** The latest version floor per id, `(id, below)`. */
+  private[operators] def latestTs(ts: DataFrame): DataFrame =
+    latestEntries(ts).select(col("id"), col("below"))
 
   /** The schema [[writeTsEntries]] writes the ledger with. */
   private def tombstoneSchema(id: DataType) = StructType(Seq(
@@ -366,51 +368,25 @@ object LexIndex {
     * the `batch` partition column; a no-op plan when no table exists.
     */
   private def applyVersionedTs(spark: SparkSession, tsDir: String,
-      df: DataFrame): DataFrame = {
-    IncrementalDedup.recoverDir(tsDir)
-    if (!IndexFs.exists(tsDir)) df
-    else df.join(broadcast(latestTs(spark, tsDir, df.schema("id").dataType)),
-        Seq("id"), "left")
-      .where(col("below").isNull || col("batch") >= col("below"))
-      .drop("below")
-  }
+      df: DataFrame): DataFrame =
+    ledger(spark, tsDir, df.schema("id").dataType).fold(df)(ts =>
+      df.join(broadcast(latestTs(ts)), Seq("id"), "left")
+        .where(col("below").isNull || col("batch") >= col("below"))
+        .drop("below"))
 
-  /** Append versioned tombstone entries (migrating a legacy id-only
-    * table first — a mixed-schema ledger would silently drop the new
-    * columns on read). Runs under the caller's index lease.
+  /** Append versioned tombstone entries stamped `at` = the ledger's next
+    * stamp. Runs under the caller's index lease.
     */
   private def writeTsEntries(spark: SparkSession, tsDir: String,
       entries: DataFrame): Long = {
-    IncrementalDedup.recoverDir(tsDir)
-    if (IndexFs.exists(tsDir) &&
-        !spark.read.parquet(tsDir).columns.contains("below")) {
-      val migrated = spark.read.parquet(tsDir).select(col("id")).distinct()
-        .select(col("id"), lit(Long.MaxValue).as("below"), lit(0L).as("at"))
-        .localCheckpoint()
-      IncrementalDedup.clearStaging(s"$tsDir.next")
-      migrated.coalesce(1).write.parquet(s"$tsDir.next")
-      IncrementalDedup.replaceDir(tsDir, s"$tsDir.next")
-    }
-    val nextAt =
-      if (!IndexFs.exists(tsDir)) 1L
-      else {
-        val m = spark.read.parquet(tsDir).agg(max(col("at"))).head()
-        (if (m.isNullAt(0)) 0L else m.getLong(0)) + 1L
-      }
-    val batch = entries.select(col("id"), col("below"))
-      .distinct().withColumn("at", lit(nextAt)).localCheckpoint()
+    val batch = entries.select(col("id"), col("below")).distinct()
+      .withColumn("at", lit(IndexLedger.nextStamp(spark, tsDir, "at")))
+      .localCheckpoint()
     val n = batch.count()
     if (n > 0) {
-      batch.coalesce(1).write.mode("append").parquet(tsDir)
-      // ledger hygiene: fold to latest-per-id past the file budget
-      if (IndexFs.fileNames(tsDir).count(_.endsWith(".parquet")) > 16) {
-        val folded = latestTs(spark, tsDir, entries.schema("id").dataType)
-          .select(col("id"), col("below"),
-            lit(nextAt).as("at")).localCheckpoint()
-        IncrementalDedup.clearStaging(s"$tsDir.next")
-        folded.coalesce(1).write.parquet(s"$tsDir.next")
-        IncrementalDedup.replaceDir(tsDir, s"$tsDir.next")
-      }
+      IndexLedger.append(batch, tsDir)
+      IndexLedger.fold(spark, tsDir,
+        tombstoneSchema(entries.schema("id").dataType), latestEntries)
     }
     n
   }
@@ -518,17 +494,13 @@ object LexIndex {
     */
   private[operators] def upsertFloorEntries(spark: SparkSession,
       root: String, batchIds: DataFrame, bid: Long): DataFrame = {
-    val tsDir = s"$root/tombstones"
-    IncrementalDedup.recoverDir(tsDir)
     val older = spark.read.parquet(s"$root/doclens")
       .where(col("batch") < bid).select(col("id"))
       .join(broadcast(batchIds), Seq("id"), "left_semi")
-    val needFloor =
-      if (!IndexFs.exists(tsDir)) older
-      else older.unionByName(
-        spark.read.schema(tombstoneSchema(batchIds.schema("id").dataType))
-          .parquet(tsDir).select(col("id"))
-          .join(broadcast(batchIds), Seq("id"), "left_semi"))
+    val needFloor = ledger(spark, s"$root/tombstones",
+        batchIds.schema("id").dataType)
+      .fold(older)(ts => older.unionByName(ts.select(col("id"))
+        .join(broadcast(batchIds), Seq("id"), "left_semi")))
     needFloor.distinct().select(col("id"), lit(bid).as("below"))
   }
 
@@ -573,7 +545,8 @@ object LexIndex {
       // to discovery once the next delta lands)
       val postings = live("postings").drop("batch").localCheckpoint()
       val doclens = live("doclens").drop("batch").localCheckpoint()
-      val meta = spark.read.parquet(s"$root/meta").localCheckpoint()
+      val meta = spark.read.schema(MetaSchema).parquet(s"$root/meta")
+        .localCheckpoint()
       val n = doclens.count()
       val next = s"$indexDir.compact"
       IncrementalDedup.clearStaging(next)
@@ -607,8 +580,8 @@ object LexIndex {
         // id also has rows in a preserved delta would resurface those —
         // guarded loudly below (convention: operator upserts do not run
         // mid-stream between a delta landing and its compact)
-        val ts = latestTs(spark, s"$root/tombstones",
-          doclens.schema("id").dataType).localCheckpoint()
+        val ts = latestTs(ledger(spark, s"$root/tombstones",
+          doclens.schema("id").dataType).get).localCheckpoint()
         val keep = ts.where(col("below") === Long.MaxValue ||
           col("below").isin(preserveBatchIds.toSeq: _*))
         val dropped = ts.where(col("below") =!= Long.MaxValue &&
@@ -650,30 +623,27 @@ object LexIndex {
       require(maxTombstoneFraction > 0 && maxTombstoneFraction < 1)
       val root = IncrementalDedup.readRoot(indexDir)
       val tsDir = s"$root/tombstones"
-      IncrementalDedup.recoverDir(tsDir)
-      if (!IndexFs.exists(tsDir)) false
+      val nEntries = IndexLedger.rows(tsDir)
+      if (nEntries == 0) false
       else {
-        val nEntries = spark.read.parquet(tsDir).count()
-        if (nEntries == 0) false
-        else {
-          // pressure = HIDDEN rows (deleted docs + superseded upsert
-          // versions — each is join work every query pays) over the LIVE
-          // count; one narrow doclens pass, exact under versioning (a
-          // raw entry count would undercount once the ledger folds)
-          val doclens = spark.read.parquet(s"$root/doclens")
-          val nDocs = doclens.count()
-          val nHidden = doclens.join(broadcast(
-              latestTs(spark, tsDir, doclens.schema("id").dataType)),
-              Seq("id"), "left")
-            .where(col("batch") < col("below")).count()
-          val nLive = nDocs - nHidden
-          if (nLive <= 0 ||
-              math.max(nHidden, nEntries).toDouble / nLive >
-                maxTombstoneFraction) {
-            compact(spark, indexDir, keepGenerations = keepGenerations)
-            true
-          } else false
-        }
+        // pressure = HIDDEN rows (deleted docs + superseded upsert
+        // versions — each is join work every query pays) over the LIVE
+        // count; one narrow doclens pass, exact under versioning (a raw
+        // entry count would undercount once the ledger folds)
+        val idType = idTypeOf(root)
+        val doclens = spark.read.schema(doclensSchema(idType))
+          .parquet(s"$root/doclens")
+        val nDocs = doclens.count()
+        val nHidden = doclens.join(broadcast(
+            latestTs(ledger(spark, tsDir, idType).get)), Seq("id"), "left")
+          .where(col("batch") < col("below")).count()
+        val nLive = nDocs - nHidden
+        if (nLive <= 0 ||
+            math.max(nHidden, nEntries).toDouble / nLive >
+              maxTombstoneFraction) {
+          compact(spark, indexDir, keepGenerations = keepGenerations)
+          true
+        } else false
       }
     }
 
@@ -697,21 +667,21 @@ object LexIndex {
     * pend; compact restores ledger-only reads).
     */
   private def liveStats(spark: SparkSession, indexDir: String,
-      tsDir: String, hasTombstones: Boolean): (Long, java.math.BigDecimal) = {
+      tsDir: String): (Long, java.math.BigDecimal) = {
     val stats = spark.read.schema(StatsSchema).parquet(s"$indexDir/stats")
       .select(col("n"), col("sumdl")).collect()
     var nLive: Long = stats.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
     var sumdlLive: java.math.BigDecimal = stats.filterNot(_.isNullAt(1))
       .map(_.getDecimal(1)).reduceOption(_ add _).orNull
-    if (hasTombstones && nLive > 0) {
+    lazy val idType = idTypeOf(indexDir)
+    if (nLive > 0) ledger(spark, tsDir, idType).foreach { ts =>
       // subtract exactly the HIDDEN doclens rows (a deletion hides all of
       // an id's rows; an upsert version floor hides the old versions
       // while the replacement's own row stays counted by its batch's
       // stats ledger entry)
-      val idType = idTypeOf(indexDir)
       val corr = spark.read.schema(doclensSchema(idType))
         .parquet(s"$indexDir/doclens")
-        .join(broadcast(latestTs(spark, tsDir, idType)), Seq("id"), "left")
+        .join(broadcast(latestTs(ts)), Seq("id"), "left")
         .where(col("batch") < col("below"))
         .agg(count(lit(1)).as("nd"),
           coalesce(sum(col("dl").cast("decimal(20,0)")),
@@ -775,9 +745,7 @@ object LexIndex {
       s"$indexDir is not a lexical index (no meta table)")
     val (nBuckets, analyzer, withPositions) = readMeta(spark, root)
     val tsDir = s"$root/tombstones"
-    IncrementalDedup.recoverDir(tsDir)
-    val (nLive, sumdlLive) =
-      liveStats(spark, root, tsDir, IndexFs.exists(tsDir))
+    val (nLive, sumdlLive) = liveStats(spark, root, tsDir)
     // the same operations bm25TopK's expression tree applies: decimal →
     // double cast, long → double cast, one IEEE division
     val avgdl = sumdlLive.doubleValue() / nLive.toDouble
@@ -825,7 +793,6 @@ object LexIndex {
         "false) — phrase search needs the positional tier: rebuild the " +
         "index with withPositions = true")
     val tsDir = s"$root/tombstones"
-    IncrementalDedup.recoverDir(tsDir)
     // the index's own analyzer applies to the phrase terms (a folded
     // index phrase-matches case-insensitively; a raw index is
     // case-sensitive — unlike TextSearch.phraseCount, which always
@@ -870,7 +837,6 @@ object LexIndex {
         "false) — phrase search needs the positional tier: rebuild the " +
         "index with withPositions = true")
     val tsDir = s"$root/tombstones"
-    IncrementalDedup.recoverDir(tsDir)
     val phrasesA = phrases.map { case (qid, p) =>
       qid -> analyzeTerms(spark, p, analyzer)
     }

@@ -548,16 +548,17 @@ object Similarity {
   private[operators] def requireNotTombstoned(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       ids: DataFrame, idCol: String): Unit = {
-    val t = s"$indexDir/tombstones"
-    IncrementalDedup.recoverDir(t)
-    if (!IndexFs.exists(t)) return
-    val sample = ids.select(col(idCol).as("neighbor_id")).distinct()
-      .join(broadcast(spark.read.parquet(t).select(col("neighbor_id"))
-        .distinct()), Seq("neighbor_id"), "left_semi")
-      .limit(4).collect().map(_.get(0))
-    require(sample.isEmpty,
-      s"append batch re-uses tombstoned ids (${sample.mkString(", ")} …): " +
-        "resolve deletions first (ivfCompact / rebuild), then re-add")
+    IndexLedger.read(spark, s"$indexDir/tombstones",
+        IncrementalDedup.tombstoneSchema("neighbor_id",
+          ids.schema(idCol).dataType))
+      .foreach { ts =>
+        val sample = ids.select(col(idCol).as("neighbor_id")).distinct()
+          .join(broadcast(ts.distinct()), Seq("neighbor_id"), "left_semi")
+          .limit(4).collect().map(_.get(0))
+        require(sample.isEmpty,
+          s"append batch re-uses tombstoned ids (${sample.mkString(", ")} …): " +
+            "resolve deletions first (ivfCompact / rebuild), then re-add")
+      }
   }
 
   /** [[ivfUpsert]]'s append guard: an id with stored upsert VERSIONS must
@@ -618,8 +619,10 @@ object Similarity {
       if (IndexFs.exists(s"$root/$name"))
         Some(name -> spark.read.parquet(s"$root/$name").localCheckpoint())
       else None
-    val side = Seq(carry("stats"), carry("pq_model"),
-      carry("drift_log").map { case (n2, df) => (n2, df.coalesce(1)) }).flatten
+    val log = IndexLedger.read(spark, s"$root/drift_log",
+        AnnMaintenance.DriftLogSchema)
+      .map(df => "drift_log" -> df.localCheckpoint().coalesce(1))
+    val side = Seq(carry("stats"), carry("pq_model"), log).flatten
     val n = cells.count()
     val files = math.max(1L, (n + targetRows - 1) / targetRows).toInt
     val next = s"$indexDir.compact"

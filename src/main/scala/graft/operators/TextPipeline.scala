@@ -224,8 +224,9 @@ object TextPipeline {
     // sort_array + GetArrayStructFields, NOT transform(array_sort(...), λ):
     // the lambda-free formulation is fully codegen'd — the interpreted-HOF
     // version cost 3.6 s cold-JVM / 0.5 s steady at sf0.1 vs 0.5/0.4 here
-    // (graft.tools.ReassembleBench), and its interpreter profiles were the
-    // documented deopt-storm source on warmed JVMs (Bench.scala header)
+    // (a micro-bench of the three reassembly formulations), and its
+    // interpreter profiles were the documented deopt-storm source on
+    // warmed JVMs (Bench.scala header)
     val reassembled = kept.groupBy(col("id"))
       .agg(
         concat_ws(delim,

@@ -46,7 +46,8 @@ object ExtensionQueries9 {
         val delIds = emb.where($"vec_id" % 270 < 54)
           .select($"vec_id").localCheckpoint()
         val nDel = delIds.count()
-        val tsFiles = s.read.parquet(s"$dir/tombstones").inputFiles.length
+        val tsFiles = IndexFs.fileNames(s"$dir/tombstones")
+          .count(_.endsWith(".parquet"))
 
         val queryRows = emb.orderBy($"vec_id").limit(4)
         def answers() = Similarity.ivfQuery(s, dir, queryRows,

@@ -393,7 +393,7 @@ object RelationalQueries {
       (s, d) => {
         import s.implicits._
         // get_json_object, not from_json: measured on the tiny-object props
-        // column (graft.tools.JsonBench, sf0.1, local[32]) from_json runs
+        // column (a micro-bench at sf0.1, local[32]) from_json runs
         // ~0.5 s steady / 3.3 s on a cold JVM (Jackson + codegen init — the
         // r8 bench recorded 3.8 s) vs ~0.36 s / 0.65 s for the JSON-path
         // extractor, against a 0.13 s no-extraction floor

@@ -276,7 +276,8 @@ object Stress {
               .select(col("id").as("vec_id")), "vec_id")
         }
       }
-      val tsFiles = spark.read.parquet(s"$delIdx/tombstones").inputFiles.length
+      val tsFiles = graft.operators.IndexFs.fileNames(s"$delIdx/tombstones")
+        .count(_.endsWith(".parquet"))
       val (preDel, tPreDelQ) = timed {
         val df = Similarity.ivfQuery(spark, delIdx, queries,
           "vec_id", "embedding", k = 5, nProbe = 4)
