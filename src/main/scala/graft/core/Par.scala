@@ -16,22 +16,24 @@ import scala.concurrent.duration._
   * is bit-identical to the sequential code, minus one action's worth of
   * driver-coordination latency.
   *
-  * Waits are bounded (one hour). When a task fails or the wait runs out,
-  * the others' Spark jobs (tagged per call) are cancelled, the pool is shut
-  * down (interrupting their threads) and the first failure is rethrown.
+  * Waits are bounded (one hour) unless the caller passes its own limit —
+  * `Duration.Inf` for work whose length grows with its input, such as
+  * pipeline stages. When a task fails or the wait runs out, the others'
+  * Spark jobs (tagged per call) are cancelled, the pool is shut down
+  * (interrupting their threads) and the first failure is rethrown.
   */
 object Par {
   private val Timeout: FiniteDuration = 1.hour
 
-  def both[A, B](fa: => A, fb: => B): (A, B) =
-    all(Seq(() => fa, () => fb), 2) match {
+  def both[A, B](fa: => A, fb: => B, timeout: Duration = Timeout): (A, B) =
+    all(Seq(() => fa, () => fb), 2, timeout) match {
       case Seq(a, b) => (a.asInstanceOf[A], b.asInstanceOf[B])
     }
 
   /** Runs `tasks` on a pool of at most `threads`; results in task order. */
   def all[A](tasks: Seq[() => A], threads: Int): Seq[A] = all(tasks, threads, Timeout)
 
-  private[core] def all[A](tasks: Seq[() => A], threads: Int, timeout: FiniteDuration): Seq[A] = {
+  private[core] def all[A](tasks: Seq[() => A], threads: Int, timeout: Duration): Seq[A] = {
     val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
     val tag = s"graft-par-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads.min(tasks.size).max(1))

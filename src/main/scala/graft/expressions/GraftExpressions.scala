@@ -542,6 +542,44 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+object IcuLowerImpl {
+  /** Spark's `lower` under UTF8_BINARY collation with ICU case mapping
+    * (`spark.sql.icu.caseMappings.enabled`, on by default): full-ASCII
+    * input lower-cases byte by byte, anything else goes through ICU's
+    * Unicode mapping of the valid string (invalid UTF-8 becomes U+FFFD),
+    * so `İ`, final sigma and `ẞ` map exactly as Spark maps them. Spark's
+    * own path runs through `CollationAwareUTF8String`, whose static
+    * initializer fills a title-case table for every code point — about
+    * 1.5 s of one executor thread on the first lowered row of a JVM.
+    */
+  def compute(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toLowerCase(s.toValidString))
+}
+
+/** Spark's `lower` (see [[IcuLowerImpl]]) without the collation layer's
+  * class initialization. Codegen'd single static call, no UDF.
+  */
+case class IcuLower(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == StringType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"lower requires a UTF8_BINARY string argument, got ${child.dataType}")
+
+  override def nullSafeEval(v: Any): Any =
+    IcuLowerImpl.compute(v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.expressions.IcuLowerImpl.compute($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): IcuLower =
+    copy(child = newChild)
+}
+
 object DeflateRatioImpl {
   /** DEFLATE-compressed size over raw UTF-8 size — the classical
     * compressibility quality signal (Rae et al., Gopher, 2021: natural

@@ -155,6 +155,8 @@ object GraftFunctions {
     org.apache.spark.sql.GraftColumnBridge.expression(c)
 
   def nfc(c: Column): Column = exprCol(NfcNormalize(expr(c)))
+  /** Spark's `lower`, same result, without its per-JVM collation init. */
+  def lower(c: Column): Column = exprCol(IcuLower(expr(c)))
   def deflateRatio(text: Column, level: Int = 6): Column =
     exprCol(DeflateRatio(expr(text), level))
   def simhash64(c: Column): Column = exprCol(SimHash64(expr(c)))

@@ -173,7 +173,7 @@ object AnnMaintenance {
     import spark.implicits._
     // the ledger lives inside the generation the append just extended
     val logRoot = s"${IncrementalDedup.readRoot(indexDir)}/drift_log"
-    val seq = IndexLedger.nextStamp(spark, logRoot, "seq")
+    val seq = IndexLedger.nextStamp(logRoot, "seq")
     IndexLedger.append(Seq((seq, st.n, st.meanL2sq, st.baselineMeanL2sq,
         st.driftRatio, st.mixtureTv)).toDF(DriftLogSchema.fieldNames: _*),
       logRoot)

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 
 /** Byte-pair-encoding tokenizer TRAINING at corpus scale — the step that
   * turns a cleaned corpus into the tokenizer its training run will use

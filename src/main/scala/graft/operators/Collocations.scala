@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 
 /** Bigram collocation mining — the phrase-discovery signal (e.g. "new
   * york", "machine learning") used to build tokenizer merge seeds, query

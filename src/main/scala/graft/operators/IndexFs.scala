@@ -83,6 +83,27 @@ object IndexFs {
     else fs.listStatus(path).toSeq.filter(_.isFile).map(_.getPath.getName)
   }
 
+  /** The visible parquet data files under `root`, depth-first through
+    * partition dirs in name order, listed lazily. Names starting with `_`
+    * or `.` are hidden, as Spark's reader hides them.
+    */
+  private def dataFiles(fs: FileSystem, root: Path): Iterator[Path] = {
+    def visible(s: org.apache.hadoop.fs.FileStatus) =
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    val (files, dirs) = fs.listStatus(root).toSeq.filter(visible)
+      .sortBy(_.getPath.getName).partition(_.isFile)
+    files.iterator.map(_.getPath).filter(_.getName.endsWith(".parquet")) ++
+      dirs.iterator.flatMap(d => dataFiles(fs, d.getPath))
+  }
+
+  private def footer[A](file: Path, conf: org.apache.hadoop.conf.Configuration)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try f(reader)
+    finally reader.close()
+  }
+
   /** The Spark schema that Spark's writer stored in the footer of the
     * first parquet data file under `p` (depth-first through partition
     * dirs), read on the driver — no Spark job. Index readers take the
@@ -93,36 +114,54 @@ object IndexFs {
   def footerSchema(p: String): org.apache.spark.sql.types.StructType = {
     val conf = hadoopConf()
     val root = new Path(p)
-    val fs = root.getFileSystem(conf)
-    def visible(s: org.apache.hadoop.fs.FileStatus) =
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
-    def firstFile(dir: Path): Option[Path] = {
-      val (files, dirs) = fs.listStatus(dir).toSeq.filter(visible)
-        .sortBy(_.getPath.getName).partition(_.isFile)
-      files.find(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
-        .orElse(dirs.iterator.flatMap(d => firstFile(d.getPath)).nextOption())
-    }
-    val file = firstFile(root).getOrElse(
+    val file = dataFiles(root.getFileSystem(conf), root).nextOption().getOrElse(
       throw new IllegalStateException(s"no parquet data file under $p"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try org.apache.spark.sql.types.DataType.fromJson(reader.getFooter
+    footer(file, conf)(r => org.apache.spark.sql.types.DataType.fromJson(r.getFooter
         .getFileMetaData.getKeyValueMetaData
         .get("org.apache.spark.sql.parquet.row.metadata"))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    finally reader.close()
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
-  /** The row count a parquet file's footer records, read on the driver —
-    * no Spark job.
+  /** The rows of every parquet data file under `p` (through partition
+    * dirs), summed from their footers on the driver — no Spark job; the
+    * count a Spark read of the dir returns. 0 when `p` is absent or holds
+    * no data file (an empty write leaves none).
     */
-  def parquetRowCount(p: String): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(p), hadoopConf()))
-    try reader.getRecordCount
-    finally reader.close()
+  def parquetRowsUnder(p: String): Long = {
+    val conf = hadoopConf()
+    val root = new Path(p)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) 0L
+    else dataFiles(fs, root).map(f => footer(f, conf)(_.getRecordCount)).sum
   }
+
+  /** `max(coalesce(c, 0))` over the rows of the parquet file `p` for the
+    * long column `c`, from the footer's column statistics on the driver —
+    * no Spark job; None when the file holds no rows. A file without the
+    * column reads as all null. A row group that holds values of `c` but
+    * carries no statistics for it is an error naming the file.
+    */
+  def footerMaxOrZero(p: String, c: String): Option[Long] =
+    footer(new Path(p), hadoopConf()) { r =>
+      val path = org.apache.parquet.hadoop.metadata.ColumnPath.get(c)
+      import scala.jdk.CollectionConverters._
+      r.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).map { b =>
+        b.getColumns.asScala.find(_.getPath == path) match {
+          case None => 0L
+          case Some(chunk) =>
+            val st = chunk.getStatistics
+            if (st == null || st.isEmpty)
+              throw new IllegalStateException(
+                s"$p: column $c holds ${chunk.getValueCount} values but no statistics")
+            // an unrecorded null count may hide nulls
+            val nullFloor =
+              if (!st.isNumNullsSet || st.getNumNulls > 0) 0L else Long.MinValue
+            if (st.hasNonNullValue)
+              st.genericGetMax.asInstanceOf[java.lang.Long].longValue.max(nullFloor)
+            else 0L
+        }
+      }.maxOption
+    }
 
   /** Write a small UTF-8 text artifact (tokenizer merges, lease markers),
     * overwriting any existing file — resolved through the path's

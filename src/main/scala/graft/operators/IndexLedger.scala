@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The append-and-fold LEDGER layer every persisted index family shares:
   * the admission indexes' `_tombstones` and `_floors`, the ANN and
@@ -58,7 +57,7 @@ object IndexLedger {
     */
   def rows(dir: String): Long = {
     IncrementalDedup.recoverDir(dir)
-    parquetFiles(dir).map(f => IndexFs.parquetRowCount(s"$dir/$f")).sum
+    IndexFs.parquetRowsUnder(dir)
   }
 
   /** Append `entries` as one file, healed first (appending beside a
@@ -104,11 +103,12 @@ object IndexLedger {
 
   /** `max + 1` over the long column `c` (a null reads as 0); 0 when the
     * ledger is absent or empty. Stamps minted under the writer lease are
-    * therefore strictly increasing across appends and folds.
+    * therefore strictly increasing across appends and folds. Read from the
+    * parquet footers' column statistics on the driver: no Spark job.
     */
-  def nextStamp(spark: SparkSession, dir: String, c: String): Long =
-    read(spark, dir, StructType(Seq(StructField(c, LongType))))
-      .map(_.agg(max(coalesce(col(c), lit(0L)))).head())
-      .collect { case m if !m.isNullAt(0) => m.getLong(0) + 1L }
-      .getOrElse(0L)
+  def nextStamp(dir: String, c: String): Long = {
+    IncrementalDedup.recoverDir(dir)
+    parquetFiles(dir).flatMap(f => IndexFs.footerMaxOrZero(s"$dir/$f", c))
+      .maxOption.fold(0L)(_ + 1L)
+  }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 
 /** Corpus-trained n-gram language-model fluency scoring — the CCNet-style
   * "perplexity filter" slot in a training-data pipeline: score every document

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 import org.apache.spark.sql.types._
 
 /** Persisted LEXICAL (BM25) index tier — the posting-slice analog of the
@@ -380,7 +382,7 @@ object LexIndex {
   private def writeTsEntries(spark: SparkSession, tsDir: String,
       entries: DataFrame): Long = {
     val batch = entries.select(col("id"), col("below")).distinct()
-      .withColumn("at", lit(IndexLedger.nextStamp(spark, tsDir, "at")))
+      .withColumn("at", lit(IndexLedger.nextStamp(tsDir, "at")))
       .localCheckpoint()
     val n = batch.count()
     if (n > 0) {

@@ -131,11 +131,12 @@ object ProductQuantizer {
     * same data, same seeds, no shared mutable state — but the wall clock
     * stops paying m × per-job scheduling latency, which dominated these
     * fits at sample scale (the capped training frame is ~256 rows per
-    * centroid by design).
+    * centroid by design). Each fit is [[kMeansCenters]]: the fit
+    * `ml.clustering.KMeans` makes, bit for bit, in only the jobs of its
+    * initialization and iterations (ml adds about three per fit).
     */
   private def fitCodebooks(unit: DataFrame, m: Int, nCodes: Int,
       subDim: Int): Vector[Vector[Vector[Double]]] = {
-    import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     // pool of 8, measured (round-21 OptProbe, t118 warmed passes): 16
     // concurrent fits on local[32] DOUBLED the job time (12 s -> 21 s wall,
@@ -145,8 +146,7 @@ object ProductQuantizer {
     graft.core.Par.all((0 until m).map { s => () =>
       val train = unit.select(
         array_to_vector(slice(col("__u"), s * subDim + 1, subDim)).as("features"))
-      new KMeans().setK(nCodes).setSeed(42L + s).setMaxIter(10).fit(train)
-        .clusterCenters.map(_.toArray.toVector).toVector
+      kMeansCenters(train, nCodes, 42L + s).map(_.toVector).toVector
     }, threads = 8).toVector
   }
 
@@ -169,6 +169,28 @@ object ProductQuantizer {
     df.where(Sampling.bernoulli(keyCol, cap.toDouble / n))
       .repartition(32, xxhash64(keyCol.cast("string")))
       .sortWithinPartitions(xxhash64(keyCol.cast("string")))
+  }
+
+  /** The centers `ml.clustering.KMeans` with `k`, `seed` and 10 iterations
+    * fits on the vector column `features` of `train`, found with the same
+    * mllib k-means, the same parameters (ml's init mode, init steps, tol
+    * and distance) and the same rows, null and NaN vectors rejected as ml
+    * rejects them. Bit-identical to the ml fit (a spec pins it), minus its
+    * jobs around the fit: the solver probe's `first` over a summary and
+    * the training summary's transform and cluster-size collect.
+    */
+  private[operators] def kMeansCenters(train: DataFrame, k: Int,
+      seed: Long): Array[Array[Double]] = {
+    val ml = new org.apache.spark.ml.clustering.KMeans()
+    val points = train
+      .select(org.apache.spark.ml.GraftMlBridge.checkNonNanVectors(col("features")))
+      .rdd.map(r => org.apache.spark.mllib.linalg.Vectors.fromML(
+        r.getAs[org.apache.spark.ml.linalg.Vector](0)))
+    new org.apache.spark.mllib.clustering.KMeans().setK(k).setSeed(seed)
+      .setMaxIterations(10).setInitializationMode(ml.getInitMode)
+      .setInitializationSteps(ml.getInitSteps).setEpsilon(ml.getTol)
+      .setDistanceMeasure(ml.getDistanceMeasure)
+      .run(points).clusterCenters.map(_.toArray)
   }
 
   /** Train `m` per-subspace codebooks of `nCodes` centroids each over the
@@ -466,7 +488,6 @@ object ProductQuantizer {
       mkModel: (DataFrame, Array[Array[Double]]) => PqModel): PqModel = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val space: Column => Column =
       if (residual) unitize else c => c
@@ -474,8 +495,8 @@ object ProductQuantizer {
     val train = sampleForFit(corpus.select(col(idCol), col(vecCol)),
         col(idCol), coarseCap)
       .select(array_to_vector(space(col(vecCol))).as("features"))
-    val km = new KMeans().setK(nCells).setSeed(42L).setMaxIter(10).fit(train)
-    val floatCenters = km.clusterCenters.map(_.toArray.map(_.toFloat.toDouble))
+    val centers = kMeansCenters(train, nCells, 42L)
+    val floatCenters = centers.map(_.map(_.toFloat.toDouble))
     // cell assignment runs against the FLOAT-ROUNDED centroid table the
     // layout persists — the exact matrix + argmin + first-min tiebreak
     // [[ivfPqAppend]] uses — so build-time and append-time assignment are
@@ -497,8 +518,8 @@ object ProductQuantizer {
     assigned
       .select($"neighbor_id", codes.as("codes"), $"cv", $"cell")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
-    km.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
+    centers.zipWithIndex
+      .map { case (c, i) => (i, c.map(_.toFloat)) }
       .toSeq.toDF("cell", "centroid")
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
     // the rotation (opq only) persists beside the codebooks — same value
@@ -916,14 +937,12 @@ object ProductQuantizer {
       nQueries: Int = 15): (Double, Double) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
 
     val train = sampleForFit(corpus.select(col(idCol), col(vecCol)),
         col(idCol), 256L * nCells)
       .select(array_to_vector(unitize(col(vecCol))).as("features"))
-    val km = new KMeans().setK(nCells).setSeed(42L).setMaxIter(10).fit(train)
-    val centers = km.clusterCenters.map(_.toArray.map(_.toFloat.toDouble))
+    val centers = kMeansCenters(train, nCells, 42L).map(_.map(_.toFloat.toDouble))
     val dim = centers.head.length
     require(dim % m == 0, s"dim $dim must split into m=$m subspaces")
     val bd = graft.expressions.GraftFunctions

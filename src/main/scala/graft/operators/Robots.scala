@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 
 /** robots.txt parsing and URL admission — the politeness companion to
   * [[WebOps.politenessRounds]]: a crawler that schedules fetches also has

@@ -148,7 +148,6 @@ object Similarity {
       nCells: Int, indexDir: String, maxTrainRows: Long = -1L): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
 
     // the coarse fit trains on a capped deterministic sample (default
@@ -159,21 +158,21 @@ object Similarity {
     val train = ProductQuantizer
       .sampleForFit(corpus.select(col(idCol), col(vecCol)), col(idCol), cap)
       .select(array_to_vector(col(vecCol)).as("features"))
-    val model = new KMeans().setK(nCells).setSeed(42L).setMaxIter(10).fit(train)
+    val centers = ProductQuantizer.kMeansCenters(train, nCells, 42L)
     // build-time assignment runs against the FLOAT-ROUNDED centroid table
     // the layout persists — the same matrix + argmin + first-min tiebreak
     // [[ivfAppend]] applies — so the persisted quantizer is ONE function
     // across build and append (no Voronoi-boundary rounding divergence
     // between km.transform's double centers and the float table)
-    val matrix = model.clusterCenters.map(_.toArray.map(_.toFloat.toDouble))
+    val matrix = centers.map(_.map(_.toFloat.toDouble))
     val bd = graft.expressions.GraftFunctions.l2sqDistances(col(vecCol), matrix)
     corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), bd.as("__d"))
       .select($"neighbor_id", $"cv",
         (array_position($"__d", array_min($"__d")) - 1).cast("int").as("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
+    centers.zipWithIndex
+      .map { case (c, i) => (i, c.map(_.toFloat)) }
       .toSeq.toDF("cell", "centroid")
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
     // per-cell baseline of the build's own assignment distances — the
@@ -295,6 +294,13 @@ object Similarity {
     driftReading(spark, root, batch)
   }
 
+  /** The per-cell drift baseline's schema, as [[ivfBuild]] and
+    * [[ProductQuantizer]]'s builds write it: read with it, `stats` starts
+    * no schema-inference job.
+    */
+  private val StatsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "cell INT, n BIGINT, mean_l2sq DOUBLE")
+
   /** Fold one append batch's per-cell (count, Σ min-distance) against the
     * build's persisted `stats` baseline into both drift sensors (see
     * [[IvfAppendStats]]) — shared by the plain and composed appends.
@@ -306,7 +312,7 @@ object Similarity {
     val meanL2sq = if (n == 0) 0.0 else batch.values.map(_._2).sum / n
     if (!IndexFs.exists(s"$indexDir/stats"))
       return IvfAppendStats(n, meanL2sq, None, None, None)
-    val rows = spark.read.parquet(s"$indexDir/stats")
+    val rows = spark.read.schema(StatsSchema).parquet(s"$indexDir/stats")
       .select("cell", "mean_l2sq", "n").collect()
     val base = rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val baseN = rows.map(r => r.getInt(0) -> r.getLong(2)).toMap

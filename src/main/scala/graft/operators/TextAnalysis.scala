@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 
 /** Text-analysis operators for large-scale training-data pipelines: token
   * counting, quality scoring, language ID, document fingerprinting, n-gram

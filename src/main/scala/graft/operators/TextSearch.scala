@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 
 /** Full-text relevance retrieval over a document corpus — BM25 scoring with
   * a deterministic top-k, the "find me training docs about X" primitive.

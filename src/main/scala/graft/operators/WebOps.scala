@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+// Spark's lower, same result, without the collation layer's per-JVM init
+import graft.expressions.GraftFunctions.lower
 
 /** URL / domain operators for web-crawl-style corpora: host extraction,
   * registrable-domain derivation, and blocklist filtering — the provenance

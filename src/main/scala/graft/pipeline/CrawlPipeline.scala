@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
 
+import scala.concurrent.duration.Duration
+
 /** The staged crawl-curation composition — the engine's analog of the
   * reference orchestrator's sequenced 1→2→3 pipeline run
   * (`setup_project.py:978-1031`: run each stage, checkpoint to the
@@ -29,10 +31,14 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
   */
 object CrawlPipeline {
 
-  /** Per-stage accounting: row count (-1 when `countStages = false`) and
-    * wall seconds for the stage's checkpoint write + count (-1 for the
-    * derived sub-counts like `10_enrich_ok`) — at 100 TB the per-stage
-    * timing is the first thing an operator asks for when a run slows.
+  /** Per-stage accounting: row count and wall seconds for the stage's
+    * checkpoint write + count (-1 for the derived sub-counts like
+    * `10_enrich_ok`) — at 100 TB the per-stage timing is the first thing
+    * an operator asks for when a run slows. Each count is summed from the
+    * parquet footers of the stage's checkpoint on the driver — the count a
+    * Spark read of it returns, at no Spark job. A daemon-mode 07b whose
+    * upsert was deferred (writer lease contended) reports rows = -1.
+    * Stage 07b runs beside stages 08 onward, so their seconds may overlap.
     */
   final case class StageCount(stage: String, rows: Long, seconds: Double = -1.0)
 
@@ -67,10 +73,6 @@ object CrawlPipeline {
       maxPayloadBytes: Int = 8 * 1024 * 1024,
       indexDir: Option[String] = None,
       enrichStage: Option[EnrichStage] = None,
-      // per-stage row accounting is one extra pass per stage (cheap here,
-      // real money on a 100 TB WARC scan) — turn it off and the returned
-      // Seq names each stage with rows = -1, checkpoints unaffected
-      countStages: Boolean = true,
       // set by [[runStream]]'s foreachBatch: switches the admission indexes
       // from swap-on-update to the replay-idempotent `batch=<id>` DELTA
       // layout ([[graft.streaming.StreamingOps.admitNearDupStream]]'s
@@ -100,22 +102,23 @@ object CrawlPipeline {
       // corpus — batch mode REBUILDS it behind a staged swap (one run =
       // one generation, like the admission indexes); daemon mode appends
       // the snapshot's curated docs as a replay-idempotent `batch=<id>`
-      // delta, with tombstoned ids DEFERRED (see the stage comment)
+      // delta, with tombstoned ids DEFERRED (see the stage comment). It
+      // runs beside stages 08 onward: both read only the 07 checkpoint
       lexDir: Option[String] = None): Seq[StageCount] = {
     val counts = scala.collection.mutable.ArrayBuffer.empty[StageCount]
+    def seconds(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+    // a stage that filtered everything away writes no part files (AQE
+    // collapses empty plans to zero partitions): zero rows
+    def rowsOf(dir: String): Long = graft.operators.IndexFs.parquetRowsUnder(dir)
     def ck(stage: String, df: DataFrame, parts: Seq[String] = Nil): DataFrame = {
       val t0 = System.nanoTime()
       val w = df.write.mode("overwrite")
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
         .parquet(s"$workDir/$stage")
-      // explicit schema: a stage that filtered everything away writes no
-      // part files (AQE collapses empty plans to zero partitions) and
-      // schema inference would fail — an empty crawl slice must flow
-      // through as zero rows, not kill the run
-      val back = spark.read.schema(df.schema).parquet(s"$workDir/$stage")
-      counts += StageCount(stage, if (countStages) back.count() else -1L,
-        (System.nanoTime() - t0) / 1e9)
-      back
+      counts += StageCount(stage, rowsOf(s"$workDir/$stage"), seconds(t0))
+      // explicit schema: with no part files, schema inference would fail —
+      // an empty crawl slice must flow through as zero rows, not kill the run
+      spark.read.schema(df.schema).parquet(s"$workDir/$stage")
     }
 
     val warc = ck("01_warc",
@@ -366,11 +369,15 @@ object CrawlPipeline {
             // full rewrites land under `batch=-1` (uniform partition-style
             // layout — see the robots staging comment: root-level files
             // would be invisible once a daemon appends its first delta)
-            IncrementalDedup.updatedIndex(fpIndex, admitted)
-              .write.mode("overwrite").parquet(s"$ix.next/fp/batch=-1")
-            IncrementalDedup.updatedSigIndex(sigIndex,
-                admitted.select(col("id"), col("sig")))
-              .write.mode("overwrite").parquet(s"$ix.next/sig/batch=-1")
+            // the two writes are independent and run side by side, with no
+            // time limit (each grows with the index)
+            graft.core.Par.both(
+              IncrementalDedup.updatedIndex(fpIndex, admitted)
+                .write.mode("overwrite").parquet(s"$ix.next/fp/batch=-1"),
+              IncrementalDedup.updatedSigIndex(sigIndex,
+                  admitted.select(col("id"), col("sig")))
+                .write.mode("overwrite").parquet(s"$ix.next/sig/batch=-1"),
+              Duration.Inf)
             // one generation commit advances robots+fp+sig together, and
             // a reader pinned to the previous snapshot's generations
             // survives it (commitGeneration's one-generation grace)
@@ -423,7 +430,7 @@ object CrawlPipeline {
     // or on the daemon's own --compact-every cadence, which PRESERVES
     // the current batch's delta verbatim (LexIndex.compact
     // preserveBatchIds — the compactDeltaIndex replay guard).
-    for (lex <- lexDir) {
+    def lexStage(lex: String): StageCount = {
       val t0 = System.nanoTime()
       val docsForLex = para.select(col("doc_id"), col("text"))
       var lexRows = -1L
@@ -452,140 +459,143 @@ object CrawlPipeline {
           }
         case None =>
           graft.operators.LexIndex.rebuild(docsForLex, "doc_id", "text", lex)
-          lexRows =
-            if (countStages) spark.read.parquet(
-              s"${IncrementalDedup.readRoot(lex)}/doclens").count()
-            else -1L
+          lexRows = rowsOf(s"${IncrementalDedup.readRoot(lex)}/doclens")
       }
-      counts += StageCount("07b_lex_index",
-        if (countStages) lexRows else -1L, (System.nanoTime() - t0) / 1e9)
+      StageCount("07b_lex_index", lexRows, seconds(t0))
     }
 
-    // leakage-safe splits: whole HOSTS land in one split, written
-    // partitioned so readers partition-prune on split=
-    val split = ck("08_splits", para
-      .withColumn("host", WebOps.host(col("url")))
-      .withColumn("split", Splits.assign(col("host"),
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))),
-      parts = Seq("split"))
+    // 08_splits through 09b_shards, which read only the 07 checkpoint too
+    def splitsToShards(): Unit = {
+      // leakage-safe splits: whole HOSTS land in one split, written
+      // partitioned so readers partition-prune on split=
+      val split = ck("08_splits", para
+        .withColumn("host", WebOps.host(col("url")))
+        .withColumn("split", Splits.assign(col("host"),
+          Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))),
+        parts = Seq("split"))
 
-    // corpus drift monitoring (daemon mode): the distribution-SHAPE check
-    // of this snapshot's curated corpus against everything previous
-    // snapshots curated — the corpus-side analog of the ANN tier's
-    // quantizer-drift diagnostic (ivfAppend's ratio): admission stays
-    // correct under a shifted crawl frontier, but the MIX the corpus feeds
-    // downstream silently changes, and this is the number that says so.
-    // The snapshot's (dim, value) profile is compared against the SUM of
-    // all previous batches' persisted profiles, then appended as its own
-    // replay-idempotent `batch=<id>` delta beside the admission indexes
-    // (own delta excluded on read, overwritten on replay — the standard
-    // discipline). Deltas are category-scale rows (hundreds per snapshot),
-    // so there is no compaction pressure; the first snapshot has no
-    // baseline and reports null tv (driftFromCounts' empty-side guard).
-    // Batch mode runs drift-free: two standalone corpora compare directly
-    // via Profiler.distributionDrift.
-    for (ix <- indexDir; bid <- snapshotId) {
-      val t0 = System.nanoTime()
-      val dims = Seq(
-        "lang" -> TextAnalysis.langId(col("text")),
-        "len" -> Profiler.log2Bucket(length(col("text"))))
-      // checkpoint: the category matrix is tiny and feeds both the report
-      // and the persisted delta — recomputing would re-scan the corpus
-      val cur = Profiler.dimCounts(split, dims).localCheckpoint()
-      val pDir = s"$ix/profile"
-      val pSchema = new StructType().add("dim", StringType)
-        .add("value", StringType).add("n", LongType)
-      def pEmpty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pSchema)
-      val prev0 =
-        if (!graft.operators.IndexFs.exists(pDir)) pEmpty
-        else
-          try spark.read.parquet(pDir)
-          catch {
-            case ae: org.apache.spark.sql.AnalysisException
-                if ae.getCondition == "UNABLE_TO_INFER_SCHEMA" => pEmpty
-          }
-      val prev = (if (prev0.columns.contains("batch"))
-          prev0.where(col("batch") =!= bid)
-        else prev0)
-        .groupBy(col("dim"), col("value")).agg(sum(col("n")).as("n"))
-      Profiler.driftFromCounts(prev, cur).coalesce(1)
-        .write.mode("overwrite").parquet(s"$workDir/08a_drift")
-      cur.write.mode("overwrite").parquet(s"$pDir/batch=$bid")
-      counts += StageCount("08a_drift",
-        if (countStages) spark.read.parquet(s"$workDir/08a_drift").count()
-        else -1L,
-        (System.nanoTime() - t0) / 1e9)
-    }
-
-    // the token weight both the mix budgets and the packing bins are sized
-    // in: whitespace tokens by default, the trained tokenizer's REAL BPE
-    // count when a model is given — one definition for both stages, or a
-    // recipe admitted in one unit would be packed in another
-    def tokWeight(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      packTokenizer.fold(TextAnalysis.tokenCount(c))(m =>
-        graft.operators.Bpe.tokenCount(c, m))
-
-    // optional mixing stages (each one an oracle-gated operator, reused
-    // unchanged): 08b tags the language (t05 semantics), 08c admits per
-    // language the maximal md5-ordered document prefix under the recipe's
-    // token budget (t108 semantics — exactly determined, reproducible
-    // row-for-row), 08d writes the deterministic round-robin training-order
-    // manifest (t82 semantics; packing keeps its own md5 shuffle order, so
-    // the manifest is a sibling checkpoint consumers join back by doc_id)
-    val (packInput, orderedOpt, packKey) = mixStage match {
-      case None => (split, None, col("doc_id"))
-      case Some(m) =>
-        val lang = ck("08b_lang",
-          split.withColumn("lang", TextAnalysis.langId(col("text"))))
-        // with repeat, a budget above a language's supply is honored by
-        // k full epochs + an exact remainder prefix (t124 semantics) and
-        // a document legitimately appears once per epoch — the composite
-        // (doc_id, epoch) key becomes the unit of identity downstream:
-        // it keeps ordering keys unique AND salts each copy's shuffle
-        // position differently (same-doc copies do not travel together)
-        val mixed = ck("08c_mix",
-          if (m.repeat) graft.operators.Sampling.repeatToBudget(
-            lang, col("lang"), col("doc_id"), tokWeight(col("text")), m.budgets)
-          else graft.operators.Sampling.exactTokenBudgets(
-            lang, col("lang"), col("doc_id"), tokWeight(col("text")), m.budgets))
-        val mixKey =
-          if (m.repeat) concat_ws(":", col("doc_id"), col("epoch"))
-          else col("doc_id")
-        val ordered = ck("08d_order", graft.operators.TrainingOrder.interleave(
-          mixed, col("lang"), mixKey, m.budgets.map(_._1), m.epoch))
-        (mixed, Some(ordered), mixKey)
-    }
-
-    ck("09_pack", TextPipeline.packSequences(
-      packInput.withColumn("n_tokens", tokWeight(col("text"))),
-      packKey, col("n_tokens"), capacity))
-
-    // 09b (optional): shard files of the same corpus 09_pack packed —
-    // the shard writers own their write discipline (partitioned, sorted
-    // within files), so this does not go through ck(). With a mix config
-    // the shards replay the 08d MIXTURE order (a loader streaming them in
-    // (shard, file, row) order reads the round-robin interleave, not the
-    // raw md5 shuffle — sharding by id would undo the order 08d built);
-    // without one they replay the epoch's md5 shuffle order.
-    shards.foreach { n =>
-      val t0 = System.nanoTime()
-      val back = orderedOpt match {
-        case Some(ordered) => graft.operators.TrainingOrder.writeMixtureShards(
-          ordered, col("global_pos"), s"$workDir/09b_shards", n)
-        case None => graft.operators.TrainingOrder.writeShards(
-          packInput, col("doc_id"), s"$workDir/09b_shards", n,
-          epoch = mixStage.map(_.epoch).getOrElse(0))
+      // corpus drift monitoring (daemon mode): the distribution-SHAPE check
+      // of this snapshot's curated corpus against everything previous
+      // snapshots curated — the corpus-side analog of the ANN tier's
+      // quantizer-drift diagnostic (ivfAppend's ratio): admission stays
+      // correct under a shifted crawl frontier, but the MIX the corpus feeds
+      // downstream silently changes, and this is the number that says so.
+      // The snapshot's (dim, value) profile is compared against the SUM of
+      // all previous batches' persisted profiles, then appended as its own
+      // replay-idempotent `batch=<id>` delta beside the admission indexes
+      // (own delta excluded on read, overwritten on replay — the standard
+      // discipline). Deltas are category-scale rows (hundreds per snapshot),
+      // so there is no compaction pressure; the first snapshot has no
+      // baseline and reports null tv (driftFromCounts' empty-side guard).
+      // Batch mode runs drift-free: two standalone corpora compare directly
+      // via Profiler.distributionDrift.
+      for (ix <- indexDir; bid <- snapshotId) {
+        val t0 = System.nanoTime()
+        val dims = Seq(
+          "lang" -> TextAnalysis.langId(col("text")),
+          "len" -> Profiler.log2Bucket(length(col("text"))))
+        // checkpoint: the category matrix is tiny and feeds both the report
+        // and the persisted delta — recomputing would re-scan the corpus
+        val cur = Profiler.dimCounts(split, dims).localCheckpoint()
+        val pDir = s"$ix/profile"
+        val pSchema = new StructType().add("dim", StringType)
+          .add("value", StringType).add("n", LongType)
+        def pEmpty = spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pSchema)
+        val prev0 =
+          if (!graft.operators.IndexFs.exists(pDir)) pEmpty
+          else
+            try spark.read.parquet(pDir)
+            catch {
+              case ae: org.apache.spark.sql.AnalysisException
+                  if ae.getCondition == "UNABLE_TO_INFER_SCHEMA" => pEmpty
+            }
+        val prev = (if (prev0.columns.contains("batch"))
+            prev0.where(col("batch") =!= bid)
+          else prev0)
+          .groupBy(col("dim"), col("value")).agg(sum(col("n")).as("n"))
+        Profiler.driftFromCounts(prev, cur).coalesce(1)
+          .write.mode("overwrite").parquet(s"$workDir/08a_drift")
+        cur.write.mode("overwrite").parquet(s"$pDir/batch=$bid")
+        counts += StageCount("08a_drift", rowsOf(s"$workDir/08a_drift"), seconds(t0))
       }
-      // the shard set is a RELEASE: seal it with the integrity manifest
-      // (bytes + footer rows + streaming md5 per part file, stored as
-      // _manifest beside the data — hidden from discovery, so replays and
-      // loaders read the same dataset with or without it); a loader runs
-      // `manifest-verify` before training instead of failing at step 40k
-      graft.sinks.DatasetManifest.write(spark, s"$workDir/09b_shards")
-      counts += StageCount("09b_shards",
-        if (countStages) back.count() else -1L,
-        (System.nanoTime() - t0) / 1e9)
+
+      // the token weight both the mix budgets and the packing bins are sized
+      // in: whitespace tokens by default, the trained tokenizer's REAL BPE
+      // count when a model is given — one definition for both stages, or a
+      // recipe admitted in one unit would be packed in another
+      def tokWeight(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+        packTokenizer.fold(TextAnalysis.tokenCount(c))(m =>
+          graft.operators.Bpe.tokenCount(c, m))
+
+      // optional mixing stages (each one an oracle-gated operator, reused
+      // unchanged): 08b tags the language (t05 semantics), 08c admits per
+      // language the maximal md5-ordered document prefix under the recipe's
+      // token budget (t108 semantics — exactly determined, reproducible
+      // row-for-row), 08d writes the deterministic round-robin training-order
+      // manifest (t82 semantics; packing keeps its own md5 shuffle order, so
+      // the manifest is a sibling checkpoint consumers join back by doc_id)
+      val (packInput, orderedOpt, packKey) = mixStage match {
+        case None => (split, None, col("doc_id"))
+        case Some(m) =>
+          val lang = ck("08b_lang",
+            split.withColumn("lang", TextAnalysis.langId(col("text"))))
+          // with repeat, a budget above a language's supply is honored by
+          // k full epochs + an exact remainder prefix (t124 semantics) and
+          // a document legitimately appears once per epoch — the composite
+          // (doc_id, epoch) key becomes the unit of identity downstream:
+          // it keeps ordering keys unique AND salts each copy's shuffle
+          // position differently (same-doc copies do not travel together)
+          val mixed = ck("08c_mix",
+            if (m.repeat) graft.operators.Sampling.repeatToBudget(
+              lang, col("lang"), col("doc_id"), tokWeight(col("text")), m.budgets)
+            else graft.operators.Sampling.exactTokenBudgets(
+              lang, col("lang"), col("doc_id"), tokWeight(col("text")), m.budgets))
+          val mixKey =
+            if (m.repeat) concat_ws(":", col("doc_id"), col("epoch"))
+            else col("doc_id")
+          val ordered = ck("08d_order", graft.operators.TrainingOrder.interleave(
+            mixed, col("lang"), mixKey, m.budgets.map(_._1), m.epoch))
+          (mixed, Some(ordered), mixKey)
+      }
+
+      ck("09_pack", TextPipeline.packSequences(
+        packInput.withColumn("n_tokens", tokWeight(col("text"))),
+        packKey, col("n_tokens"), capacity))
+
+      // 09b (optional): shard files of the same corpus 09_pack packed —
+      // the shard writers own their write discipline (partitioned, sorted
+      // within files), so this does not go through ck(). With a mix config
+      // the shards replay the 08d MIXTURE order (a loader streaming them in
+      // (shard, file, row) order reads the round-robin interleave, not the
+      // raw md5 shuffle — sharding by id would undo the order 08d built);
+      // without one they replay the epoch's md5 shuffle order.
+      shards.foreach { n =>
+        val t0 = System.nanoTime()
+        orderedOpt match {
+          case Some(ordered) => graft.operators.TrainingOrder.writeMixtureShards(
+            ordered, col("global_pos"), s"$workDir/09b_shards", n)
+          case None => graft.operators.TrainingOrder.writeShards(
+            packInput, col("doc_id"), s"$workDir/09b_shards", n,
+            epoch = mixStage.map(_.epoch).getOrElse(0))
+        }
+        // the shard set is a RELEASE: seal it with the integrity manifest
+        // (bytes + footer rows + streaming md5 per part file, stored as
+        // _manifest beside the data — hidden from discovery, so replays and
+        // loaders read the same dataset with or without it); a loader runs
+        // `manifest-verify` before training instead of failing at step 40k
+        graft.sinks.DatasetManifest.write(spark, s"$workDir/09b_shards")
+        counts += StageCount("09b_shards", rowsOf(s"$workDir/09b_shards"), seconds(t0))
+      }
+    }
+
+    // 07b runs beside 08 onward, with no time limit (both scale with the
+    // corpus); its count keeps its place before 08's
+    val at = counts.size
+    lexDir match {
+      case None => splitsToShards()
+      case Some(lex) => counts.insert(at,
+        graft.core.Par.both(lexStage(lex), splitsToShards(), Duration.Inf)._1)
     }
 
     // optional LLM enrichment over the curated corpus (the reference's
@@ -642,12 +652,9 @@ object CrawlPipeline {
           e.transportFactory, e.promptTemplate, e.config,
           limiterFactory = envelope.limiterFactory,
           slotFactory = envelope.slotFactory)
-        val out = ck("10_enrich",
-          enriched.toDF().unionByName(carried), parts = Seq("ok"))
-        if (countStages) {
-          counts += StageCount("10_enrich_ok", out.where(col("ok")).count())
-          counts += StageCount("10_enrich_fail", out.where(!col("ok")).count())
-        }
+        ck("10_enrich", enriched.toDF().unionByName(carried), parts = Seq("ok"))
+        counts += StageCount("10_enrich_ok", rowsOf(s"$eDir/ok=true"))
+        counts += StageCount("10_enrich_fail", rowsOf(s"$eDir/ok=false"))
       } finally envelope.stop()
     }
 
@@ -681,7 +688,7 @@ object CrawlPipeline {
     */
   def runStream(spark: SparkSession, warcDir: String, workDir: String,
       indexDir: String, agent: String = "graftbot", capacity: Long = 2048L,
-      maxPayloadBytes: Int = 8 * 1024 * 1024, countStages: Boolean = true,
+      maxPayloadBytes: Int = 8 * 1024 * 1024,
       // optional per-snapshot LLM enrichment. Replay-SAFE for the expensive
       // part: a replayed micro-batch anti-joins its own previous ok-outputs
       // before touching the transport (see the 10_enrich stage), so only
@@ -746,7 +753,7 @@ object CrawlPipeline {
           val counts = run(spark, paths.mkString(","),
             s"$workDir/batch=$batchId", agent, capacity, maxPayloadBytes,
             indexDir = Some(indexDir), enrichStage = enrichStage,
-            countStages = countStages, snapshotId = Some(batchId),
+            snapshotId = Some(batchId),
             qualityThresholds = qualityThresholds,
             mixStage = mixStage, packTokenizer = packTokenizer,
             shards = shards, lexDir = lexDir)

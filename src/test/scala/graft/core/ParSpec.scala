@@ -8,7 +8,8 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.concurrent.duration._
 
 /** `Par`: results come back in order; a failing side cancels its sibling,
-  * shuts the pool down and surfaces its own exception; waits are finite.
+  * shuts the pool down and surfaces its own exception; waits are finite
+  * unless the caller asks for none.
   */
 class ParSpec extends SparkSpec {
 
@@ -61,6 +62,17 @@ class ParSpec extends SparkSpec {
     val deadline = 20.seconds.fromNow
     while (tracker.getActiveJobIds().nonEmpty && deadline.hasTimeLeft()) Thread.sleep(50)
     assert(tracker.getActiveJobIds().isEmpty, "the sibling's job is still running")
+  }
+
+  test("with no time limit, results still come back and a failing side still cancels") {
+    assert(Par.both(1, "b", Duration.Inf) == ((1, "b")))
+    val boom = new IllegalStateException("boom")
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Par.both({ Thread.sleep(200); throw boom }, { Thread.sleep(60000); 2 }, Duration.Inf)
+    }
+    assert(e eq boom)
+    assert(secondsSince(t0) < 30)
   }
 
   test("a side running past the timeout fails the call with a TimeoutException") {

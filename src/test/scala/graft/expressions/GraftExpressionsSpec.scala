@@ -446,4 +446,20 @@ class GraftExpressionsSpec extends SparkSpec {
     assert(spark.sql("SELECT graft_deflate_ratio('')")
       .as[Double].collect()(0) == 1.0)
   }
+
+  test("lower matches Spark's lower on ASCII, special casings, invalid UTF-8 and null") {
+    val samples = Seq("Plain ASCII 123", "HTTP://Example.ORG/Path", "İstanbul IĞDIR",
+      "ΟΔΟΣ ΣΟΦΟΣ", "STRAẞE ẞ", "Ǆemal ǅ", "ÉCOLE Ω", "", null)
+    val invalid = lit(Array[Byte](0x41, 0xC3.toByte, 0x28, 0xFF.toByte, 0x5A)).cast("string")
+    val text = Seq(samples: _*).toDF("s").select($"s")
+      .unionByName(spark.range(1).select(invalid.as("s")))
+      .unionByName(Tables.documents(spark, sf0001).select(upper($"text").as("s")).limit(50))
+    // interpreted over a local relation, then codegen'd over a checkpoint
+    for (df <- Seq(text, text.localCheckpoint())) {
+      val rows = df.select(GraftFunctions.lower($"s").as("graft"), lower($"s").as("spark"))
+        .collect()
+      assert(rows.length == samples.size + 51)
+      rows.foreach(r => assert(r.getString(0) == r.getString(1), r))
+    }
+  }
 }

@@ -74,7 +74,7 @@ class IndexLedgerSpec extends SparkSpec {
     def lexWrite(i: Int): Unit =
       if (i % 2 == 0 && i < 16)
         IndexLedger.append(lexIds(i).map(id => (id, i.toLong,
-          IndexLedger.nextStamp(spark, lexTs, "at"))).toDF("id", "below", "at"),
+          IndexLedger.nextStamp(lexTs, "at"))).toDF("id", "below", "at"),
           lexTs)
       else LexIndex.delete(spark, lexDir, lexIds(i).toDF("doc_id"), "doc_id")
     foldCase(lexTs, lexWrite, { (before, i) =>
@@ -99,7 +99,7 @@ class IndexLedgerSpec extends SparkSpec {
     IndexLedger.fold(spark, logDir, AnnMaintenance.DriftLogSchema, identity)
     assert(files(logDir) == 1)
     assert(sorted(rowsOf(logDir)) == sorted(logBefore))
-    assert(IndexLedger.nextStamp(spark, logDir, "seq") == 18L)
+    assert(IndexLedger.nextStamp(logDir, "seq") == 18L)
 
     // a `.old` left beside a missing live dir (a crash between the swap's
     // two renames) is rolled back by the next read, rows intact
@@ -185,7 +185,53 @@ class IndexLedgerSpec extends SparkSpec {
       s"Similarity.ivfDelete: ${annJobs.size} jobs $annJobs")
   }
 
-  /** The jobs each delete verb starts on an index whose ledger exists. */
-  private val LexDeleteJobs = 7
+  test("footer stamps equal the max(coalesce) aggregation on mixed-null, multi-file ledgers") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, at BIGINT")
+    def aggregated(dir: String): Long = {
+      val m = spark.read.schema(schema).parquet(dir)
+        .agg(max(coalesce($"at", lit(0L)))).head()
+      if (m.isNullAt(0)) 0L else m.getLong(0) + 1L
+    }
+    val dir = s"${tmp("ledger_stamp")}/ts"
+    def add(rows: Seq[(Long, Option[Long])]): Unit =
+      IndexLedger.append(rows.toDF("id", "at"), dir)
+    def same(): Unit = assert(IndexLedger.nextStamp(dir, "at") == aggregated(dir))
+
+    assert(IndexLedger.nextStamp(dir, "at") == 0L) // absent
+    add(Seq.empty); same() // a file of zero rows
+    add(Seq((1L, None), (2L, None))); same() // all null reads as 0: stamp 1
+    assert(IndexLedger.nextStamp(dir, "at") == 1L)
+    add(Seq((3L, Some(4L)), (4L, None))); same() // mixed nulls in one file
+    add(Seq((5L, Some(2L)))); same() // a lower max in a later file
+    // a file without the column (an older layout) reads as null
+    Seq(6L).toDF("id").coalesce(1).write.mode("append").parquet(dir)
+    same()
+    assert(IndexLedger.nextStamp(dir, "at") == 5L)
+    // several row groups in one file: each row group's statistics count
+    spark.range(0, 20000).select($"id", ($"id" % 7000).as("at")).coalesce(1)
+      .write.mode("append").option("parquet.block.size", 4096L).parquet(dir)
+    val rowGroups = IndexFs.fileNames(dir).filter(_.endsWith(".parquet")).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$dir/$f"), spark.sessionState.newHadoopConf()))
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(rowGroups.max > 1, "one row group per file only")
+    same()
+    assert(IndexLedger.nextStamp(dir, "at") == 7000L)
+
+    // a file that holds values of the column but no statistics for it
+    val bare = s"${tmp("ledger_bare")}/ts"
+    Seq((1L, 9L)).toDF("id", "at").coalesce(1).write
+      .option("parquet.column.statistics.enabled", "false").parquet(bare)
+    val err = intercept[IllegalStateException](IndexLedger.nextStamp(bare, "at"))
+    val file = IndexFs.fileNames(bare).find(_.endsWith(".parquet")).get
+    assert(err.getMessage.contains(file), err.getMessage)
+  }
+
+  /** The jobs each delete verb starts on an index whose ledger exists:
+    * LexIndex.delete mints its stamp from the footers (no aggregation).
+    */
+  private val LexDeleteJobs = 5
   private val IvfDeleteJobs = 5
 }
